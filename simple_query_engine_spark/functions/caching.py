@@ -1,17 +1,33 @@
-"""Session cache registry for load-once/query-many DataFrames.
+"""Session registry for load-once/query-many derived state.
 
-Several operators cache an expensive intermediate (shingle tables, LSH
-signature/bucket tables) for the session, because a typical analytics
-session loads one corpus and runs many queries against it.  Left
-unmanaged, a session that touches several scale dirs accumulates one
-cached copy per dir and relies on LRU eviction alone.
+Several operators keep an expensive intermediate (shingle tables, LSH
+signature/bucket tables, k-means centroids, the near-dup edge list) for
+the session, because a typical analytics session loads one corpus and
+runs many queries against it.
 
-``session_cache`` centralizes the policy: caches are tagged with the
-``sf_dir`` they derive from, and requesting a cache for a *different*
-``sf_dir`` unpersists every cache tagged with another dir first — the
-working set is always one scale dir wide.  Within one dir, repeated calls
-rebuild an identical plan and Spark's cache manager serves the existing
-materialization.
+Every entry point takes a zero-argument ``build`` function and a *key*,
+and looks the entry up BEFORE anything is built: a hit returns the
+stored handle and never calls ``build``, so a warm caller pays neither
+the plan construction (py4j round-trips plus classic-mode eager
+analysis) nor any probe job inside ``build``.  The reuse key of an
+entry is
+
+* the current SparkSession (the registry belongs to one session: a
+  handle never outlives the session that made it);
+* ``key`` — which must name everything the built plan reads besides the
+  tables of ``sf_dir`` (parameters such as a k or a key prefix go into
+  the key string);
+* ``sf_dir`` and its fingerprint, the ``(name, size, mtime_ns)`` of every
+  ``*.parquet`` under it (:func:`sources.catalog.dir_fingerprint`, the
+  staleness rule of the catalog's handle memo);
+* ``token`` — per-call state the plan also reads (a scratch or managed
+  table path, a change feed's table): a changed token rebuilds the entry
+  and releases the old one.
+
+The working set is one scale dir and one generation of it wide: a
+request for another ``sf_dir``, or for the same dir after a table was
+rewritten in place, first releases every entry built from the other
+dir or generation.
 
 Assumes queries run sequentially in a session (the harness does);
 concurrent queries over different scale dirs would evict each other.
@@ -20,28 +36,58 @@ concurrent queries over different scale dirs would evict each other.
 from __future__ import annotations
 
 import os
+import shutil
 import warnings
+import weakref
+from dataclasses import dataclass
+from typing import Any, Callable, Hashable
 
 from py4j.protocol import Py4JError
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# key -> (sf_dir, cached handle)
-_TRACKED: dict[str, tuple[str, DataFrame]] = {}
+from simple_query_engine_spark.sources.catalog import dir_fingerprint
+
+
+@dataclass
+class _Entry:
+    sf_dir: str
+    fingerprint: tuple | None
+    token: Hashable
+    value: Any
+    release: Callable[[], None]
+    # False when the stored value can no longer be served (a swept
+    # materialization); None: always live.
+    live: Callable[[], bool] | None = None
+
+
+# (kind, key) -> entry, owned by one session: the engine runs one
+# SparkSession per process, and the default session only changes after
+# the previous one stopped, so a new owner releases the whole registry
+# instead of serving handles from a dead session.
+_ENTRIES: dict[tuple[str, str], _Entry] = {}
+_OWNER: "weakref.ref[SparkSession] | None" = None
+
+
+def _entries() -> dict[tuple[str, str], _Entry]:
+    """The current session's registry.  The default session is a
+    Python-side attribute (no JVM round-trip, unlike
+    ``getActiveSession``, and set in every thread)."""
+    global _OWNER
+    session = SparkSession._instantiatedSession or SparkSession.active()
+    if _OWNER is None or _OWNER() is not session:
+        evict_all()
+        _OWNER = weakref.ref(session)
+    return _ENTRIES
 
 
 def _unpersist_quietly(handle: DataFrame) -> None:
-    """Unpersist, tolerating a handle whose SparkSession has been stopped
-    and recreated within the same Python process: the module-level
-    registry outlives sessions, and letting the py4j error escape BEFORE
-    the registry entry is removed would poison ``_TRACKED`` permanently
-    (every later call re-hits the dead handle and fails)."""
+    """Unpersist, tolerating a handle whose SparkSession has been stopped:
+    the py4j call fails (Py4JError and subclasses) or an internal ref is
+    already torn down (AttributeError); nothing is left to release."""
     try:
         handle.unpersist()
     except (Py4JError, AttributeError):
-        # Stale handle from a stopped session — the py4j gateway call
-        # fails (Py4JError and subclasses) or an internal ref is already
-        # torn down (AttributeError); nothing left to release.
         pass
     except Exception as exc:
         # A GENUINE unpersist failure (e.g. an interrupted job) must not
@@ -53,47 +99,47 @@ def _unpersist_quietly(handle: DataFrame) -> None:
         )
 
 
-def session_cache(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
-    """Cache ``df`` for the session under ``key``, evicting caches that
-    belong to a different scale dir."""
-    for other_key, (other_dir, handle) in list(_TRACKED.items()):
-        if other_dir != sf_dir:
-            del _TRACKED[other_key]
-            _unpersist_quietly(handle)
-    prior = _TRACKED.get(key)
-    if prior is not None:
-        try:
-            if df.sameSemantics(prior[1]):
-                return prior[1]
-        except Exception:
-            # Stale handle from a stopped session: fall through to
-            # replace it (the cache itself died with that session).
-            pass
-        # Same key, new plan (e.g. a scratch-table path baked into the
-        # lineage changed): release the stale blocks instead of leaking
-        # them for the rest of the session.
-        del _TRACKED[key]
-        _unpersist_quietly(prior[1])
-    handle = df.cache()
-    _TRACKED[key] = (sf_dir, handle)
-    return handle
+def _lookup(
+    kind: str,
+    build: Callable[[], tuple[Any, Callable[[], None], Callable[[], bool] | None]],
+    sf_dir: str,
+    key: str,
+    token: Hashable,
+) -> Any:
+    entries = _entries()
+    fingerprint = dir_fingerprint(sf_dir)
+    for other, entry in list(entries.items()):
+        if (entry.sf_dir, entry.fingerprint) != (sf_dir, fingerprint):
+            del entries[other]
+            entry.release()
+    entry = entries.get((kind, key))
+    if entry is not None:
+        if entry.token == token and (entry.live is None or entry.live()):
+            return entry.value
+        del entries[(kind, key)]
+        entry.release()
+    value, release, live = build()
+    entries[(kind, key)] = _Entry(sf_dir, fingerprint, token, value, release, live)
+    return value
 
 
-def evict_all() -> None:
-    """Unpersist every tracked cache (test hook / explicit session reset)."""
-    handles = [handle for _, (_, handle) in list(_TRACKED.items())]
-    _TRACKED.clear()
-    for handle in handles:
-        _unpersist_quietly(handle)
-    evict_all_materialized()
+def session_cache(
+    build: Callable[[], DataFrame], sf_dir: str, key: str, token: Hashable = None
+) -> DataFrame:
+    """The session's cached ``build()`` under ``key`` (see the module
+    docstring for the reuse key); ``build`` runs only on a miss."""
+
+    def make():
+        handle = build().cache()
+        return handle, lambda: _unpersist_quietly(handle), None
+
+    return _lookup("cache", make, sf_dir, key, token)
 
 
-# key -> (sf_dir, plan handle for sameSemantics, path, read-back handle)
-_MATERIALIZED: dict[str, tuple[str, DataFrame, str, DataFrame]] = {}
-
-
-def session_materialize(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
-    """Like :func:`session_cache`, but materialize ``df`` to parquet in a
+def session_materialize(
+    build: Callable[[], DataFrame], sf_dir: str, key: str, token: Hashable = None
+) -> DataFrame:
+    """Like :func:`session_cache`, but write ``build()`` to parquet in a
     PROCESS-scoped scratch dir and return a DataFrame that scans the
     files — i.e. every downstream plan starts from a scan LEAF.
 
@@ -108,51 +154,50 @@ def session_materialize(df: DataFrame, sf_dir: str, key: str) -> DataFrame:
     ``_propagate_labels``' per-round parquet round-trip, for the same
     guide-§3.3/"very large plans" reason.
 
-    The scratch root is created fresh per process (``mkdtemp`` under the
-    shared sweep-managed root), so nothing is ever served across
-    processes — a fresh bench/driver run always recomputes from the
-    source parquet.  Same-key/new-plan and cross-``sf_dir`` staleness
-    follow session_cache's rules; the read-back pins ``df.schema`` so
-    the scan's types (and nullability) are exactly the plan's."""
-    import shutil
+    Each materialization gets a fresh ``mkdtemp`` dir under the shared
+    sweep-managed root, so nothing is ever served across processes — a
+    fresh process always recomputes from the source parquet.
+    A root sweep (``SQE_SCRATCH_TTL_SEC``) can reclaim a long-lived
+    entry's files, so a hit first checks they still exist and refreshes
+    the dir's mtime: a live entry ages from its last USE.  The read-back
+    pins the built plan's schema, so the scan's types (and nullability)
+    are exactly the plan's."""
 
-    for other_key, entry in list(_MATERIALIZED.items()):
-        if entry[0] != sf_dir:
-            del _MATERIALIZED[other_key]
-            shutil.rmtree(entry[2], ignore_errors=True)
-    prior = _MATERIALIZED.get(key)
-    if prior is not None:
-        try:
-            # Liveness guard (ADVICE r17): a session outliving
-            # SQE_SCRATCH_TTL_SEC can have a LATER materialization's root
-            # sweep reclaim this entry's parquet — verify the files still
-            # exist before serving the handle, and refresh the swept
-            # unit's mtime (the per-call mkdtemp dir) so a live entry
-            # keeps aging from its last USE, not its creation.
-            if df.sameSemantics(prior[1]) and os.path.exists(prior[2]):
-                try:
-                    os.utime(os.path.dirname(prior[2]), None)
-                except OSError:
-                    pass
-                return prior[3]
-        except Exception:
-            pass  # stale handle from a stopped session: rebuild below
-        del _MATERIALIZED[key]
-        shutil.rmtree(prior[2], ignore_errors=True)
-    from simple_query_engine_spark.operators.storage import scratch_dir
+    def make():
+        from simple_query_engine_spark.operators.storage import scratch_dir
 
-    path = os.path.join(scratch_dir("mat_", "sqe_session_mat"), key)
-    df.write.parquet(path)
-    read_back = df.sparkSession.read.schema(df.schema).parquet(path)
-    _MATERIALIZED[key] = (sf_dir, df, path, read_back)
-    return read_back
+        df = build()
+        root = scratch_dir("mat_", "sqe_session_mat")
+        path = os.path.join(root, key)
+        df.write.parquet(path)
+        read_back = df.sparkSession.read.schema(df.schema).parquet(path)
+
+        def live() -> bool:
+            if not os.path.exists(path):
+                return False
+            try:
+                os.utime(root, None)
+            except OSError:
+                pass
+            return True
+
+        return read_back, lambda: shutil.rmtree(root, ignore_errors=True), live
+
+    return _lookup("materialize", make, sf_dir, key, token)
 
 
-def evict_all_materialized() -> None:
-    """Delete every in-session materialization (test hook / reset)."""
-    import shutil
+def session_value(
+    build: Callable[[], Any], sf_dir: str, key: str, token: Hashable = None
+) -> Any:
+    """A driver-side value (e.g. a bounded collected edge list) under the
+    same reuse key; ``build`` runs only on a miss.  Callers must treat
+    the value as read-only — every hit shares it."""
+    return _lookup("value", lambda: (build(), lambda: None, None), sf_dir, key, token)
 
-    entries = list(_MATERIALIZED.values())
-    _MATERIALIZED.clear()
-    for _, _, path, _ in entries:
-        shutil.rmtree(path, ignore_errors=True)
+
+def evict_all() -> None:
+    """Release every entry (test hook / explicit reset)."""
+    entries = list(_ENTRIES.values())
+    _ENTRIES.clear()
+    for entry in entries:
+        entry.release()

@@ -658,6 +658,23 @@ KMV_EPOCH = "2024-01-01"
 KMV_TYPE_A, KMV_TYPE_B = "click", "purchase"
 
 
+def _kmv_elements(spark: SparkSession, sf_dir: str, hex_width: int) -> DataFrame:
+    """Distinct (event_type, h) elements of the two KMV event types, ``h``
+    an md5 prefix of ``hex_width`` hex digits over (user_id, day)."""
+    events = table(spark, sf_dir, "events")
+    day = F.datediff(F.to_date("ts"), F.lit(KMV_EPOCH).cast("date"))
+    return (
+        events.filter(F.col("event_type").isin(KMV_TYPE_A, KMV_TYPE_B))
+        .select(
+            "event_type",
+            md5_prefix_long(
+                F.concat_ws(":", F.col("user_id"), day), hex_width
+            ).alias("h"),
+        )
+        .distinct()
+    )
+
+
 def q_sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (theta-style) set-intersection sketch — audience overlap
     between two event types over (user, activity-day) elements: each
@@ -678,23 +695,13 @@ def q_sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort); the exact side is the small-scale audit — at production
     scale only the sketch path runs.
     """
-    events = table(spark, sf_dir, "events")
-    day = F.datediff(F.to_date("ts"), F.lit(KMV_EPOCH).cast("date"))
-    elems = (
-        events.filter(F.col("event_type").isin(KMV_TYPE_A, KMV_TYPE_B))
-        .select(
-            "event_type",
-            md5_prefix_long(
-                F.concat_ws(":", F.col("user_id"), day), KMV_HEX
-            ).alias("h"),
-        )
-        .distinct()
-    )
     # ONE cached element page feeds all five 1-row branches below:
     # Catalyst does not dedupe identical subtrees, so uncached each
     # branch (and sketch_overlap's sketch lineages twice over) would
     # re-run the corpus-scale events scan + distinct shuffle.
-    elems = session_cache(elems, sf_dir, "kmv_overlap_elems")
+    elems = session_cache(
+        lambda: _kmv_elements(spark, sf_dir, KMV_HEX), sf_dir, "kmv_overlap_elems"
+    )
     full_a = elems.filter(F.col("event_type") == KMV_TYPE_A).select("h")
     full_b = elems.filter(F.col("event_type") == KMV_TYPE_B).select("h")
     sketch_a = full_a.orderBy("h").limit(KMV_K)
@@ -761,21 +768,13 @@ def q_sketch_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator's (k−1)·M product fits int64 (63·2⁶⁰ overflows, 63·2⁴⁸
     doesn't; 48 bits keeps collisions negligible to ~2²⁴ elements —
     declared trade)."""
-    events = table(spark, sf_dir, "events")
-    day = F.datediff(F.to_date("ts"), F.lit(KMV_EPOCH).cast("date"))
-    elems = (
-        events.filter(F.col("event_type").isin(KMV_TYPE_A, KMV_TYPE_B))
-        .select(
-            "event_type",
-            md5_prefix_long(
-                F.concat_ws(":", F.col("user_id"), day), KMV_UNION_HEX
-            ).alias("h"),
-        )
-        .distinct()
-    )
     # Same subtree-dedup discipline as sketch_kmv_overlap: one cached
     # element page instead of a fresh scan per branch.
-    elems = session_cache(elems, sf_dir, "kmv_union_elems")
+    elems = session_cache(
+        lambda: _kmv_elements(spark, sf_dir, KMV_UNION_HEX),
+        sf_dir,
+        "kmv_union_elems",
+    )
     full_a = elems.filter(F.col("event_type") == KMV_TYPE_A).select("h")
     full_b = elems.filter(F.col("event_type") == KMV_TYPE_B).select("h")
     sketch_a = full_a.orderBy("h").limit(KMV_K)

@@ -40,7 +40,11 @@ from simple_query_engine_spark.functions.hashing import (
     md5_prefix_long,
     md5_prefix_long_sql,
 )
-from simple_query_engine_spark.functions.caching import session_cache
+from simple_query_engine_spark.functions.caching import (
+    session_cache,
+    session_materialize,
+    session_value,
+)
 from simple_query_engine_spark.operators.text import _NORM, _normalized
 from simple_query_engine_spark.sources.catalog import table
 
@@ -65,9 +69,12 @@ _MINHASH_PARAMS = [
 ]
 
 
-def _shingles_of(documents: DataFrame, sf_dir: str, cache_key: str) -> DataFrame:
+def _shingles_of(
+    documents: DataFrame, sf_dir: str, cache_key: str, token=None
+) -> DataFrame:
     """doc_id → exploded distinct word-3-gram shingles (short docs collapse
-    to one whole-text shingle) for any ``(doc_id, text)`` source.
+    to one whole-text shingle) for any ``(doc_id, text)`` source, cached
+    under ``cache_key`` (and ``token``: see :func:`session_cache`).
 
     The input is repartitioned on doc_id — with an EXPLICIT partition count
     — before the compute-heavy shingle/explode work: a small single-split
@@ -77,31 +84,32 @@ def _shingles_of(documents: DataFrame, sf_dir: str, cache_key: str) -> DataFrame
     (measured: 3.7 s → 0.9 s for the sf0.1 shingle stage).  At scale the
     same repartition bounds per-task skew from variable-length documents.
     """
-    documents = documents.repartition(
-        documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    )
-    # The word array materializes in its own projection first: an inline
-    # split referenced inside the transform lambda defeats CSE and
-    # re-tokenizes the document once per shingle (see _contam_shingles in
-    # pipeline.py — measured 8x on the equivalent 5-gram derivation).
-    words = F.col("w")
-    shingle_array = F.when(
-        F.size(words) >= _SHINGLE_WIDTH,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (_SHINGLE_WIDTH - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, _SHINGLE_WIDTH)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    tokenized = documents.select(
-        "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
-    )
-    return session_cache(
-        tokenized.select("doc_id", F.explode(shingle_array).alias("shingle")),
-        sf_dir,
-        cache_key,
-    )
+
+    def build() -> DataFrame:
+        repartitioned = documents.repartition(
+            documents.sparkSession.sparkContext.defaultParallelism, "doc_id"
+        )
+        # The word array materializes in its own projection first: an
+        # inline split referenced inside the transform lambda defeats CSE
+        # and re-tokenizes the document once per shingle (see
+        # _contam_shingles in pipeline.py — measured 8x on the equivalent
+        # 5-gram derivation).
+        words = F.col("w")
+        shingle_array = F.when(
+            F.size(words) >= _SHINGLE_WIDTH,
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(words) - (_SHINGLE_WIDTH - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(words, i, _SHINGLE_WIDTH)),
+                )
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", words)))
+        tokenized = repartitioned.select(
+            "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
+        )
+        return tokenized.select("doc_id", F.explode(shingle_array).alias("shingle"))
+
+    return session_cache(build, sf_dir, cache_key, token)
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,9 +184,7 @@ def _cap_shingle_df(shingles: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFr
     return shingles.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def _pair_stats(
-    shingles: DataFrame, sf_dir: str, cache_key: str = "dedup_jaccard_windowed"
-) -> DataFrame:
+def _pair_stats(shingles: DataFrame, sf_dir: str, cache_key: str) -> DataFrame:
     """Shingle self-join → per-pair (common_shingles, size_a, size_b).
 
     Set sizes ride along on each shingle row via a count window over
@@ -192,7 +198,7 @@ def _pair_stats(
     from pyspark.sql.window import Window
 
     shingles = session_cache(
-        shingles.withColumn(
+        lambda: shingles.withColumn(
             "set_size", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
         ),
         sf_dir,
@@ -217,9 +223,10 @@ def _pair_stats(
     )
 
 
-def _jaccard_pairs(shingles: DataFrame, sf_dir: str) -> DataFrame:
-    """Pair docs by shared shingles and score exact Jaccard ≥ threshold."""
-    pairs = _pair_stats(shingles, sf_dir)
+def _jaccard_pairs(shingles: DataFrame, sf_dir: str, cache_key: str) -> DataFrame:
+    """Pair docs by shared shingles and score exact Jaccard ≥ threshold
+    (``cache_key`` names ``shingles``: see :func:`_pair_stats`)."""
+    pairs = _pair_stats(shingles, sf_dir, cache_key)
     jaccard = F.col("common_shingles") / (
         F.col("size_a") + F.col("size_b") - F.col("common_shingles")
     )
@@ -240,7 +247,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     *capped* shingle sets on both sides, and the DuckDB oracle applies the
     identical cap, so the two engines agree bit-for-bit.
     """
-    return _jaccard_pairs(_cap_shingle_df(_shingles(spark, sf_dir)), sf_dir)
+    return _jaccard_pairs(
+        _cap_shingle_df(_shingles(spark, sf_dir)), sf_dir, "dedup_jaccard_windowed"
+    )
 
 
 def _minhash_sig_of(shingles: DataFrame) -> DataFrame:
@@ -332,10 +341,8 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, band_idx, band_hash) — 24 bytes/row — with the 512-byte
     signatures fetched afterwards for the deduped candidate pairs only.
     """
-    from simple_query_engine_spark.functions.caching import session_materialize
-
     sig = session_materialize(
-        minhash_signatures(spark, sf_dir), sf_dir, "dedup_minhash_sig"
+        lambda: minhash_signatures(spark, sf_dir), sf_dir, "dedup_minhash_sig"
     )
     return _minhash_lsh_pairs(sig, JACCARD_THRESHOLD)
 
@@ -473,10 +480,8 @@ def _planted_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters), and as a cached-but-unmaterialized plan its 64-aggregate
     subtree was re-analyzed by the JVM inside every consumer's every
     transformation — see ``session_materialize``."""
-    from simple_query_engine_spark.functions.caching import session_materialize
-
     return session_materialize(
-        _minhash_sig_of(
+        lambda: _minhash_sig_of(
             _shingles_of(
                 _planted_documents(spark, sf_dir), sf_dir, "dedup_shingles_planted"
             )
@@ -639,22 +644,26 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    words = F.col("w")
-    span_array = F.when(
-        F.size(words) >= DUP_SPAN_WORDS,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (DUP_SPAN_WORDS - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(words, i, DUP_SPAN_WORDS))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    tokenized = documents.select(
-        "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
-    )
-    occ = session_cache(
-        tokenized.select("doc_id", F.posexplode(span_array).alias("pos", "h")),
-        sf_dir,
-        "dedup_substring_occ",
-    )
+
+    def build_occ() -> DataFrame:
+        words = F.col("w")
+        span_array = F.when(
+            F.size(words) >= DUP_SPAN_WORDS,
+            F.transform(
+                F.sequence(F.lit(1), F.size(words) - (DUP_SPAN_WORDS - 1)),
+                lambda i: F.md5(
+                    F.concat_ws(" ", F.slice(words, i, DUP_SPAN_WORDS))
+                ),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+        tokenized = documents.select(
+            "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
+        )
+        return tokenized.select(
+            "doc_id", F.posexplode(span_array).alias("pos", "h")
+        )
+
+    occ = session_cache(build_occ, sf_dir, "dedup_substring_occ")
     dup = (
         occ.select("doc_id", "h")
         .distinct()
@@ -917,25 +926,27 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cache: both legs of the self-join read pair_rows — without the cache
     # each leg re-runs the signature aggregation (token explode + 60
     # bit-vote sums), doubling the dominant cost.
-    sig = simhash_signatures(spark, sf_dir)
     chunk_cols = [f"chunk{i}" for i in range(SIMHASH_CHUNKS)]
-    pair_rows = sig.select(
-        "doc_id",
-        *chunk_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p).alias("pair_idx"),
-                        F.col(f"chunk{i}").alias("val_i"),
-                        F.col(f"chunk{j}").alias("val_j"),
-                    )
-                    for p, (i, j) in enumerate(_CHUNK_PAIRS)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", *chunk_cols, "c.pair_idx", "c.val_i", "c.val_j")
-    pair_rows = session_cache(pair_rows, sf_dir, "dedup_simhash_pairs")
+
+    def build_pair_rows() -> DataFrame:
+        return simhash_signatures(spark, sf_dir).select(
+            "doc_id",
+            *chunk_cols,
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(p).alias("pair_idx"),
+                            F.col(f"chunk{i}").alias("val_i"),
+                            F.col(f"chunk{j}").alias("val_j"),
+                        )
+                        for p, (i, j) in enumerate(_CHUNK_PAIRS)
+                    ]
+                )
+            ).alias("c"),
+        ).select("doc_id", *chunk_cols, "c.pair_idx", "c.val_i", "c.val_j")
+
+    pair_rows = session_cache(build_pair_rows, sf_dir, "dedup_simhash_pairs")
     left = pair_rows.alias("a")
     right = pair_rows.alias("b")
     hamming = sum(
@@ -1086,7 +1097,13 @@ def _local_label_spread(
                 votes[d][labeled[s][0]] += 1
         new = {}
         for d, v in votes.items():
-            best = min(v.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            # The distributed window's order: count desc, then label asc
+            # with NULLs first (Spark's ascending default) — a NULL-source
+            # seed votes a NULL label, which must not be compared with str.
+            best = min(
+                v.items(),
+                key=lambda kv: (-kv[1], kv[0] is not None, kv[0] or ""),
+            )[0]
             new[d] = (best, rnd)
         labeled.update(new)
     schema = StructType(
@@ -1626,11 +1643,29 @@ def _neardup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed; dedup_minhash_lsh ITSELF stays uncached (the bench's warm
     number for it keeps measuring the pair computation)."""
     return session_cache(
-        q_dedup_minhash_lsh(spark, sf_dir).select("doc_id_a", "doc_id_b"),
+        lambda: q_dedup_minhash_lsh(spark, sf_dir).select("doc_id_a", "doc_id_b"),
         sf_dir,
         "neardup_graph_pairs",
     )
 
+
+def _neardup_edge_rows(spark: SparkSession, sf_dir: str):
+    """``(bounded edge rows or None, node type)`` of the shared near-dup
+    graph: one :func:`_bounded_edge_rows` probe of its symmetric edge
+    list, kept for the session next to the pair cache it reads, so the
+    driver solves (pagerank, label spreading, k-core) stop re-collecting
+    the same rows per call.  The cap is part of the reuse key: a changed
+    ``spark.sqe.cc.localEdgeCap`` probes again."""
+    cap = _cc_local_edge_cap(spark)
+
+    def build():
+        pairs = _neardup_pairs_cached(spark, sf_dir)
+        return (
+            _bounded_edge_rows(_symmetric_edges(pairs), cap),
+            pairs.schema["doc_id_a"].dataType,
+        )
+
+    return session_value(build, sf_dir, "neardup_edge_rows", token=cap)
 
 
 def q_graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1658,8 +1693,6 @@ def q_graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     no lineage blow-up (the self-join analyzer explosion that forces
     ``_propagate_labels``' parquet truncation does not occur here
     because rank never joins itself)."""
-    pairs = _neardup_pairs_cached(spark, sf_dir)
-    edges = _symmetric_edges(pairs)
     # Size-adaptive fast path (guide §2.4/§5, the _local_components
     # discipline, r18): a bounded graph solves on the driver in exact
     # integer arithmetic — value-identical to the distributed chain
@@ -1667,18 +1700,21 @@ def q_graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python-model test) — replacing 5 iterations × (join + partial-agg
     # shuffle + join) with one bounded probe.  Over-cap graphs (a
     # corpus-sized pair graph at 100 TB) keep the distributed plan below.
-    head = _bounded_edge_rows(edges, _cc_local_edge_cap(spark))
+    head, node_type = _neardup_edge_rows(spark, sf_dir)
     if head is not None:
-        return _local_pagerank(spark, head, edges.schema["src"].dataType)
+        return _local_pagerank(spark, head, node_type)
+    edges = _symmetric_edges(_neardup_pairs_cached(spark, sf_dir))
     # BOTH static tables cache: deg is referenced in every iteration's
     # rank rebuild (and the final join) — uncached, each reference
     # re-executes the whole LSH candidate join upstream of it.
     deg = session_cache(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")),
+        lambda: edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")),
         sf_dir,
         "pagerank_deg",
     )
-    edges_deg = session_cache(edges.join(deg, "src"), sf_dir, "pagerank_edges")
+    edges_deg = session_cache(
+        lambda: edges.join(deg, "src"), sf_dir, "pagerank_edges"
+    )
     base = PAGERANK_BASE
     rank = deg.select(F.col("src").alias("node"), F.lit(PAGERANK_UNIT).alias("rank"))
     for _ in range(PAGERANK_ITERATIONS):
@@ -1779,20 +1815,17 @@ def q_graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-deep union), so no lineage truncation is needed."""
     from pyspark.sql.window import Window
 
-    pairs = _neardup_pairs_cached(spark, sf_dir)
     # Size-adaptive fast path (r18, the _local_components discipline):
     # bounded graphs solve on the driver — same seed rule, same majority
     # total order, one bounded probe + one seed-source lookup job instead
     # of rounds × (vote join + anti-join + window).  Equality pinned in
     # test_label_spread_fast_path_matches_distributed and by the
     # Python-model test; over-cap graphs keep the distributed rounds.
-    head = _bounded_edge_rows(_symmetric_edges(pairs), _cc_local_edge_cap(spark))
+    head, node_type = _neardup_edge_rows(spark, sf_dir)
     if head is not None:
-        return _local_label_spread(
-            spark, sf_dir, head, pairs.schema["doc_id_a"].dataType
-        )
+        return _local_label_spread(spark, sf_dir, head, node_type)
     edges = session_cache(
-        _symmetric_edges(pairs),
+        lambda: _symmetric_edges(_neardup_pairs_cached(spark, sf_dir)),
         sf_dir,
         "label_spread_edges",
     )
@@ -1805,7 +1838,7 @@ def q_graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every reference is linear (the pagerank iterations don't need this
     # because rank never joins itself twice).
     labels = session_cache(
-        nodes.filter(F.col("node") % LABEL_SEED_MOD == 0)
+        lambda: nodes.filter(F.col("node") % LABEL_SEED_MOD == 0)
         .join(docs, F.col("node") == F.col("doc_id"))
         .select(
             "node", F.col("source").alias("label"), F.lit(0).alias("labeled_round")
@@ -1816,7 +1849,9 @@ def q_graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(1, LABEL_SPREAD_ROUNDS + 1):
         w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label"))
         new = session_cache(
-            edges.join(labels.select(F.col("node").alias("src"), "label"), "src")
+            lambda: edges.join(
+                labels.select(F.col("node").alias("src"), "label"), "src"
+            )
             .join(
                 labels.select(F.col("node").alias("dst")),
                 "dst",
@@ -1902,7 +1937,7 @@ def q_graph_triangles_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _neardup_pairs_cached(spark, sf_dir)
     edges = _symmetric_edges(pairs)
     deg = session_cache(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+        lambda: edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
         sf_dir,
         "tri_deg",
     )
@@ -1919,7 +1954,7 @@ def q_graph_triangles_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("deg_a") == F.col("deg_b")) & (F.col("doc_id_a") < F.col("doc_id_b"))
     )
     oriented = session_cache(
-        und.select(
+        lambda: und.select(
             F.when(a_first, F.col("doc_id_a")).otherwise(F.col("doc_id_b")).alias("u"),
             F.when(a_first, F.col("doc_id_b")).otherwise(F.col("doc_id_a")).alias("v"),
             F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_v"),
@@ -2255,7 +2290,6 @@ def q_graph_kcore_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed OOM by round 6); scratch holds R+1 node lists, all of which
     the final union scans.  Nothing is all-pairs and the driver never
     sees a node list."""
-    pairs = _neardup_pairs_cached(spark, sf_dir)
     # Size-adaptive fast path (r18, the _local_components discipline):
     # a bounded graph peels on the driver — pure integer set arithmetic,
     # edge-row-for-edge-row the distributed rounds' semantics — replacing
@@ -2263,9 +2297,10 @@ def q_graph_kcore_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one bounded probe.  Equality pinned in
     # test_kcore_fast_path_matches_distributed and by the Python-model
     # test; over-cap graphs keep the materialized peeling loop.
-    head = _bounded_edge_rows(_symmetric_edges(pairs), _cc_local_edge_cap(spark))
+    head, node_type = _neardup_edge_rows(spark, sf_dir)
     if head is not None:
-        return _local_kcore(spark, head, pairs.schema["doc_id_a"].dataType)
+        return _local_kcore(spark, head, node_type)
+    pairs = _neardup_pairs_cached(spark, sf_dir)
     scratch = _cc_scratch_dir(spark)
 
     def _materialize(df: DataFrame, name: str) -> DataFrame:

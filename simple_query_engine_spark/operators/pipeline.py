@@ -282,24 +282,27 @@ def _contam_shingles(documents: DataFrame, sf_dir: str | None = None) -> DataFra
     document once per gram — measured 8x slower at sf0.1.  The separate
     alias is referenced non-trivially, so CollapseProject keeps it as a
     once-per-row evaluation."""
-    words = F.col("w")
-    grams = F.when(
-        F.size(words) >= CONTAM_NGRAM,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(words) - (CONTAM_NGRAM - 1)),
-                lambda i: F.concat_ws(" ", F.slice(words, i, CONTAM_NGRAM)),
-            )
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    out = documents.select(
-        "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
-    ).select("doc_id", F.explode(grams).alias("gram"))
-    if sf_dir is not None:
-        from simple_query_engine_spark.functions.caching import session_cache
 
-        out = session_cache(out, sf_dir, "contam_shingles")
-    return out
+    def build() -> DataFrame:
+        words = F.col("w")
+        grams = F.when(
+            F.size(words) >= CONTAM_NGRAM,
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(words) - (CONTAM_NGRAM - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(words, i, CONTAM_NGRAM)),
+                )
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", words)))
+        return documents.select(
+            "doc_id", F.split(_normalized(F.col("text")), " ").alias("w")
+        ).select("doc_id", F.explode(grams).alias("gram"))
+
+    if sf_dir is None:
+        return build()
+    from simple_query_engine_spark.functions.caching import session_cache
+
+    return session_cache(build, sf_dir, "contam_shingles")
 
 
 def q_text_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,20 +353,19 @@ def q_text_decontamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast).  Verification touches candidates only."""
     from simple_query_engine_spark.functions.caching import session_cache
 
-    base = table(spark, sf_dir, "documents").select("doc_id", "text")
-    leaked = base.filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID).select(
-        offset_doc_id(PLANT_DOC_OFFSET, "fuzzy-decontamination leak ids").alias(
-            "doc_id"
-        ),
-        F.concat(F.col("text"), F.lit(" " + PLANT_SUFFIX)).alias("text"),
-    )
-    sig = session_cache(
-        _minhash_sig_of(
+    def build_sig() -> DataFrame:
+        base = table(spark, sf_dir, "documents").select("doc_id", "text")
+        leaked = base.filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID).select(
+            offset_doc_id(
+                PLANT_DOC_OFFSET, "fuzzy-decontamination leak ids"
+            ).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" " + PLANT_SUFFIX)).alias("text"),
+        )
+        return _minhash_sig_of(
             _shingles_of(base.union(leaked), sf_dir, "decontam_fuzzy_shingles")
-        ),
-        sf_dir,
-        "decontam_fuzzy_sig",
-    )
+        )
+
+    sig = session_cache(build_sig, sf_dir, "decontam_fuzzy_sig")
     evals = sig.filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID)
     corpus = sig.filter(F.col("doc_id") >= EVAL_SET_MAX_DOC_ID)
     candidates = (
@@ -551,9 +553,8 @@ def _mixture_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simple_query_engine_spark.functions.caching import session_cache
     from simple_query_engine_spark.functions.hashing import md5_prefix_long
 
-    documents = table(spark, sf_dir, "documents")
     return session_cache(
-        documents.select(
+        lambda: table(spark, sf_dir, "documents").select(
             "source",
             F.size(F.split(_normalized(F.col("text")), " ")).alias("n_tokens"),
             F.pmod(
@@ -856,9 +857,6 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("n_tokens").alias("total_tokens"),
         )
     )
-    sig_v0 = _minhash_sig_of(
-        _shingles_of(v0.select("doc_id", "text"), sf_dir, "inccur_shingles_v0")
-    )
 
     # -- the changed-docs batch MERGEs in (v1) ------------------------------
     edits = documents.filter(
@@ -896,17 +894,26 @@ def q_pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     # Signature-table maintenance: drop deleted ids, append signatures
-    # computed over inserted rows only.
-    sig_delta = _minhash_sig_of(
-        _shingles_of(
-            inserted.select("doc_id", "text"), sf_dir, "inccur_shingles_delta"
+    # computed over inserted rows only.  The v0 shingles read only the
+    # documents table; the delta and the maintained table read this
+    # call's managed table, so its path is their token.
+    def build_sig_v1() -> DataFrame:
+        sig_v0 = _minhash_sig_of(
+            _shingles_of(v0.select("doc_id", "text"), sf_dir, "inccur_shingles_v0")
         )
-    )
-    sig_v1 = session_cache(
-        sig_v0.join(deleted_ids, "doc_id", "left_anti").unionByName(sig_delta),
-        sf_dir,
-        "inccur_sig_v1",
-    )
+        sig_delta = _minhash_sig_of(
+            _shingles_of(
+                inserted.select("doc_id", "text"),
+                sf_dir,
+                "inccur_shingles_delta",
+                token=t.path,
+            )
+        )
+        return sig_v0.join(deleted_ids, "doc_id", "left_anti").unionByName(
+            sig_delta
+        )
+
+    sig_v1 = session_cache(build_sig_v1, sf_dir, "inccur_sig_v1", token=t.path)
 
     # Incremental near-dup: new-doc bands probe the maintained corpus bands.
     batch_sig = sig_v1.filter(F.col("doc_id") >= INC_NEW_OFFSET)

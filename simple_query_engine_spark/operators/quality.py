@@ -263,16 +263,16 @@ def _distributed_ntile(
     At 100 TB nothing funnels through one task: the ranks cost one range
     exchange + one keyed window per bucket; the offsets are metadata-sized.
     """
-    bucketed = df.repartitionByRange(RFM_RANGE_BUCKETS, *order_cols).withColumn(
-        "_b", F.spark_partition_id()
-    )
-    ranked = session_cache(
-        bucketed.withColumn(
+
+    def build_ranked() -> DataFrame:
+        bucketed = df.repartitionByRange(
+            RFM_RANGE_BUCKETS, *order_cols
+        ).withColumn("_b", F.spark_partition_id())
+        return bucketed.withColumn(
             "_lr", F.row_number().over(Window.partitionBy("_b").orderBy(*order_cols))
-        ),
-        sf_dir,
-        cache_key,
-    )
+        )
+
+    ranked = session_cache(build_ranked, sf_dir, cache_key)
     counts = ranked.groupBy("_b").agg(F.max("_lr").cast("long").alias("_cnt"))
     offsets = (
         counts.alias("a")
@@ -327,18 +327,22 @@ def q_events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     max timestamp is a 1-row broadcast aggregate, and the three scored
     tables re-join on the unique user_id key.
     """
-    events = table(spark, sf_dir, "events")
-    per_user = events.groupBy("user_id").agg(
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-    )
     # ONE cached per-user page feeds the corpus-max probe and all three
     # ntile builds: Catalyst does not dedupe identical subtrees (the
     # sim_ivf_rebuild lesson), so without the cache each of the three
     # ranked materializations — plus the broadcast corpus_max lineage —
     # would re-run the corpus-scale events scan + groupBy.
-    per_user = session_cache(per_user, sf_dir, "rfm_per_user")
+    per_user = session_cache(
+        lambda: table(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(
+            F.max("ts").alias("last_ts"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        ),
+        sf_dir,
+        "rfm_per_user",
+    )
     corpus_max = per_user.agg(F.max("last_ts").alias("_corpus_max"))
     scored = (
         per_user.crossJoin(F.broadcast(corpus_max))

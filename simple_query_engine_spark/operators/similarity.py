@@ -350,21 +350,29 @@ def q_sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neardup_lsh_pairs(
     embeddings: DataFrame, sf_dir: str, cache_key: str, threshold: float
 ) -> DataFrame:
-    """Multi-table LSH near-dup pairs over any (vec_id, embedding) relation."""
-    planes = _int_hyperplanes(count=NEARDUP_TABLES * NEARDUP_BITS)
+    """Multi-table LSH near-dup pairs over any (vec_id, embedding) relation
+    (``cache_key`` names it: see :func:`session_cache`)."""
     scaled = embeddings.withColumn("sv", _scaled_embedding())
-    # One F.expr per table instead of a per-literal Column graph (9,216
-    # F.lit py4j round-trips ≈ 10 s of driver wall) — see _plane_dot_sql.
-    bucket_cols = []
-    for t in range(NEARDUP_TABLES):
-        bucket_sql = " + ".join(
-            f"(CASE WHEN {_plane_dot_sql('sv', planes[t * NEARDUP_BITS + i])} >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(NEARDUP_BITS)
-        )
-        bucket_cols.append(
-            F.expr(f"named_struct('table_idx', {t}, 'bucket', {bucket_sql})")
-        )
+
+    def build_buckets() -> DataFrame:
+        planes = _int_hyperplanes(count=NEARDUP_TABLES * NEARDUP_BITS)
+        # One F.expr per table instead of a per-literal Column graph
+        # (9,216 F.lit py4j round-trips ≈ 10 s of driver wall) — see
+        # _plane_dot_sql.
+        bucket_cols = []
+        for t in range(NEARDUP_TABLES):
+            bucket_sql = " + ".join(
+                f"(CASE WHEN {_plane_dot_sql('sv', planes[t * NEARDUP_BITS + i])} >= 0 "
+                f"THEN {1 << i} ELSE 0 END)"
+                for i in range(NEARDUP_BITS)
+            )
+            bucket_cols.append(
+                F.expr(f"named_struct('table_idx', {t}, 'bucket', {bucket_sql})")
+            )
+        return scaled.select(
+            "vec_id", F.explode(F.array(*bucket_cols)).alias("tb")
+        ).select("vec_id", "tb.table_idx", "tb.bucket")
+
     # Shuffle keys, not payloads (guide §2.3/§8): the bucket SELF-join
     # moves only (vec_id, table_idx, bucket) — ~24 bytes/row — while the
     # 64-double embeddings stay in a one-row-per-vector table that is
@@ -377,19 +385,13 @@ def _neardup_lsh_pairs(
     # hyperplane dot products per vector otherwise recompute per leg),
     # vectors feed the two candidate fetch joins.
     vecs = session_cache(
-        scaled.select(
+        lambda: scaled.select(
             "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
         ),
         sf_dir,
         f"{cache_key}_vectors",
     )
-    buckets = session_cache(
-        scaled.select(
-            "vec_id", F.explode(F.array(*bucket_cols)).alias("tb")
-        ).select("vec_id", "tb.table_idx", "tb.bucket"),
-        sf_dir,
-        cache_key,
-    )
+    buckets = session_cache(build_buckets, sf_dir, cache_key)
     candidates = (
         buckets.alias("a")
         .join(
@@ -903,7 +905,9 @@ def q_sim_recall_floor_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means + probe/search + brute force + the recall rollup.
     """
     members = session_cache(
-        _planted_cluster_corpus(spark, sf_dir), sf_dir, "planted_recall_corpus"
+        lambda: _planted_cluster_corpus(spark, sf_dir),
+        sf_dir,
+        "planted_recall_corpus",
     )
     k = _adaptive_k(table(spark, sf_dir, "embeddings").count(), KNN_K_FLOOR)
     vectors, cent = _kmeans_trained(
@@ -1017,7 +1021,7 @@ def q_sim_sq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical, and the rerank is the established round-4 cosine.
     """
     base = session_cache(
-        table(spark, sf_dir, "embeddings").select(
+        lambda: table(spark, sf_dir, "embeddings").select(
             "vec_id",
             "embedding",
             F.transform(
@@ -1132,7 +1136,7 @@ def _pq_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached (vec_id, embedding, codes) table — each vector's
     PQ_M one-byte sign-grid codes (see :func:`q_sim_pq_rerank`)."""
     return session_cache(
-        table(spark, sf_dir, "embeddings").select(
+        lambda: table(spark, sf_dir, "embeddings").select(
             "vec_id",
             "embedding",
             # PQ encode: one byte per subspace — the sign bits of the 8 dims.
@@ -1404,24 +1408,18 @@ def _kmeans_trained(
     ``base_filter`` restricts the TRAINING set (seeds and iterations);
     the returned ``vectors`` frame is always the full corpus, so callers
     can assign rows the quantizer never saw (the index-append path).
-    ``key_prefix`` keys the per-iteration session caches — a filtered
-    training run must not collide with the default one.  ``embeddings``
-    overrides the corpus (a derived (vec_id, embedding) frame — the
-    planted-recall fixture); default is the sf_dir embeddings table."""
+    ``key_prefix`` keys the per-iteration session materializations
+    together with ``k``, so it must name ``base_filter`` and
+    ``embeddings`` — a filtered training run must not collide with the
+    default one.  ``embeddings`` overrides the corpus (a derived
+    (vec_id, embedding) frame — the planted-recall fixture); default is
+    the sf_dir embeddings table."""
     if embeddings is None:
         embeddings = table(spark, sf_dir, "embeddings")
     vectors = embeddings.select(
         "vec_id", kmeans_shifted_sv(F.col("embedding")).alias("sv")
     )
     base = vectors.filter(base_filter) if base_filter is not None else vectors
-    seeds = (
-        base.withColumn(
-            "h", md5_prefix_long(F.col("vec_id").cast("string"), IVF_HASH_WIDTH)
-        )
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cell_id"), F.col("sv").alias("cv"))
-    )
     # EVERY iteration's K-row centroid table is materialized, not just
     # the final one (r18): with session_cache the it-th plan still embeds
     # the (it-1)-th's full lineage, so each training CONSTRUCTION re-built
@@ -1432,8 +1430,17 @@ def _kmeans_trained(
     # rows the cache served (see session_materialize; process-scoped).
     from simple_query_engine_spark.functions.caching import session_materialize
 
-    cent = session_materialize(seeds, sf_dir, f"{key_prefix}_cent_0")
-    for it in range(1, iters + 1):
+    def build_seeds() -> DataFrame:
+        return (
+            base.withColumn(
+                "h", md5_prefix_long(F.col("vec_id").cast("string"), IVF_HASH_WIDTH)
+            )
+            .orderBy("h", "vec_id")
+            .limit(k)
+            .select(F.col("vec_id").alias("cell_id"), F.col("sv").alias("cv"))
+        )
+
+    def build_step(cent: DataFrame) -> DataFrame:
         assigned = _kmeans_assign(base, cent)
         dims = assigned.select("cell_id", F.posexplode("sv").alias("j", "x"))
         means = dims.groupBy("cell_id", "j").agg(
@@ -1444,12 +1451,14 @@ def _kmeans_trained(
                 F.array_sort(F.collect_list(F.struct("j", "m"))), lambda s: s.m
             ).alias("new_cv")
         )
+        return cent.join(updated, "cell_id", "left").select(
+            "cell_id", F.coalesce("new_cv", "cv").alias("cv")
+        )
+
+    cent = session_materialize(build_seeds, sf_dir, f"{key_prefix}_k{k}_cent_0")
+    for it in range(1, iters + 1):
         cent = session_materialize(
-            cent.join(updated, "cell_id", "left").select(
-                "cell_id", F.coalesce("new_cv", "cv").alias("cv")
-            ),
-            sf_dir,
-            f"{key_prefix}_cent_{it}",
+            lambda: build_step(cent), sf_dir, f"{key_prefix}_k{k}_cent_{it}"
         )
     return vectors, cent
 
@@ -1639,23 +1648,22 @@ def q_sim_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: the 64 (dim_idx, component) rows of the final direction —
     hash-exact; the oracle unrolls the iterations as CTE chains."""
-    emb = table(spark, sf_dir, "embeddings")
-    sv = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * EMB_SCALE).cast("long"),
-        ).alias("sv"),
-    )
-    exploded = session_cache(
-        sv.select(
+
+    def build_exploded() -> DataFrame:
+        sv = table(spark, sf_dir, "embeddings").select(
+            "vec_id",
+            F.transform(
+                F.col("embedding"),
+                lambda x: F.floor(x.cast("double") * EMB_SCALE).cast("long"),
+            ).alias("sv"),
+        )
+        return sv.select(
             "vec_id", F.posexplode("sv").alias("j0", "val")
-        ).select("vec_id", (F.col("j0") + 1).alias("j"), "val"),
-        sf_dir,
-        "power_iter_exploded",
-    )
-    v = None  # (j, vj); None means v0 = all ones
-    for it in range(1, POWER_ITERS + 1):
+        ).select("vec_id", (F.col("j0") + 1).alias("j"), "val")
+
+    exploded = session_cache(build_exploded, sf_dir, "power_iter_exploded")
+
+    def build_v(v: DataFrame | None) -> DataFrame:
         if v is None:
             d = exploded.groupBy("vec_id").agg(F.sum("val").alias("d"))
         else:
@@ -1670,13 +1678,13 @@ def q_sim_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("val") * F.col("d")).alias("w"))
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = session_cache(
-            w.crossJoin(F.broadcast(m)).select(
-                "j", F.expr(f"w * {POWER_VSCALE} div m").alias("vj")
-            ),
-            sf_dir,
-            f"power_iter_v{it}",
+        return w.crossJoin(F.broadcast(m)).select(
+            "j", F.expr(f"w * {POWER_VSCALE} div m").alias("vj")
         )
+
+    v = None  # (j, vj); None means v0 = all ones
+    for it in range(1, POWER_ITERS + 1):
+        v = session_cache(lambda: build_v(v), sf_dir, f"power_iter_v{it}")
     return v.select(F.col("j").alias("dim_idx"), F.col("vj").alias("component"))
 
 
@@ -1830,7 +1838,7 @@ def _ivf_trained_search(
     from simple_query_engine_spark.functions.caching import session_materialize
 
     members = session_materialize(
-        _kmeans_assign(vectors, cent).select(
+        lambda: _kmeans_assign(vectors, cent).select(
             F.col("vec_id").alias("neighbor_id"), "cell_id"
         ),
         sf_dir,
@@ -2178,7 +2186,7 @@ def q_sim_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simple_query_engine_spark.functions.caching import session_materialize
 
     base_members = session_materialize(
-        _kmeans_assign(vectors.filter(~is_batch), cent).select(
+        lambda: _kmeans_assign(vectors.filter(~is_batch), cent).select(
             F.col("vec_id").alias("neighbor_id"), "cell_id"
         ),
         sf_dir,
@@ -2277,7 +2285,7 @@ def q_sim_ivf_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches stop re-embedding — and the JVM stops re-analyzing — two
     # corpus-wide assignment pipelines.
     drift_members = session_materialize(
-        _kmeans_assign(vectors.filter(~is_batch), dcent).select(
+        lambda: _kmeans_assign(vectors.filter(~is_batch), dcent).select(
             F.col("vec_id").alias("neighbor_id"), "cell_id"
         ),
         sf_dir,
@@ -2289,7 +2297,7 @@ def q_sim_ivf_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rvec, rcent = _kmeans_trained(spark, sf_dir)
     reb_members = session_materialize(
-        _kmeans_assign(rvec, rcent).select(
+        lambda: _kmeans_assign(rvec, rcent).select(
             F.col("vec_id").alias("neighbor_id"), "cell_id"
         ),
         sf_dir,
@@ -2306,7 +2314,9 @@ def q_sim_ivf_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single most expensive subplan in the entry; uncached, the crossJoin
     # composition below would execute it once per branch.
     exact = session_cache(
-        q_sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id"),
+        lambda: q_sim_topk_bruteforce(spark, sf_dir).select(
+            "query_id", "neighbor_id"
+        ),
         sf_dir,
         "rebuild_exact_topk",
     )
@@ -2448,57 +2458,59 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sim_knn_graph`` (mutual-flag symmetrization) and
     ``sim_knn_density`` (outlier scoring).  The quantizer is the
     K ∝ √N adaptive one: candidate volume ~nprobe·N^{3/2}, not N²."""
-    vectors, cent = _knn_quantizer(spark, sf_dir)
-    members = _kmeans_assign(vectors, cent).select(
-        F.col("vec_id").alias("neighbor_id"), "cell_id"
-    )
-    probe_scored = vectors.crossJoin(F.broadcast(cent)).select(
-        F.col("vec_id").alias("query_id"),
-        "cell_id",
-        _kmeans_sqdist(F.col("sv"), F.col("cv")).alias("d"),
-    )
-    probes = (
-        probe_scored.groupBy("query_id")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct("d", "cell_id"))),
-                1,
-                KMEANS_NPROBE,
-            ).alias("cells")
+
+    def build() -> DataFrame:
+        vectors, cent = _knn_quantizer(spark, sf_dir)
+        members = _kmeans_assign(vectors, cent).select(
+            F.col("vec_id").alias("neighbor_id"), "cell_id"
         )
-        .select("query_id", F.explode(F.col("cells.cell_id")).alias("cell_id"))
-    )
-    queries = _with_norm(
-        table(spark, sf_dir, "embeddings"), "query_id", "q_emb", "q_norm"
-    )
-    cands = _with_norm(
-        table(spark, sf_dir, "embeddings"), "neighbor_id", "c_emb", "c_norm"
-    )
-    cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_norm") * F.col("c_norm")
-    )
-    scored = (
-        probes.join(members, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(queries, "query_id")
-        .join(cands, "neighbor_id")
-        .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity").desc(), F.col("neighbor_id")
-    )
-    return session_cache(
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= KNN_GRAPH_K)
-        .select(
-            F.col("query_id").alias("vec_id"),
-            "neighbor_id",
-            "knn_rank",
-            "similarity",
-        ),
-        sf_dir,
-        "knn_graph_edges",
-    )
+        probe_scored = vectors.crossJoin(F.broadcast(cent)).select(
+            F.col("vec_id").alias("query_id"),
+            "cell_id",
+            _kmeans_sqdist(F.col("sv"), F.col("cv")).alias("d"),
+        )
+        probes = (
+            probe_scored.groupBy("query_id")
+            .agg(
+                F.slice(
+                    F.array_sort(F.collect_list(F.struct("d", "cell_id"))),
+                    1,
+                    KMEANS_NPROBE,
+                ).alias("cells")
+            )
+            .select("query_id", F.explode(F.col("cells.cell_id")).alias("cell_id"))
+        )
+        queries = _with_norm(
+            table(spark, sf_dir, "embeddings"), "query_id", "q_emb", "q_norm"
+        )
+        cands = _with_norm(
+            table(spark, sf_dir, "embeddings"), "neighbor_id", "c_emb", "c_norm"
+        )
+        cosine = _dot(F.col("q_emb"), F.col("c_emb")) / (
+            F.col("q_norm") * F.col("c_norm")
+        )
+        scored = (
+            probes.join(members, "cell_id")
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .join(queries, "query_id")
+            .join(cands, "neighbor_id")
+            .select("query_id", "neighbor_id", F.round(cosine, 4).alias("similarity"))
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("similarity").desc(), F.col("neighbor_id")
+        )
+        return (
+            scored.withColumn("knn_rank", F.row_number().over(w))
+            .filter(F.col("knn_rank") <= KNN_GRAPH_K)
+            .select(
+                F.col("query_id").alias("vec_id"),
+                "neighbor_id",
+                "knn_rank",
+                "similarity",
+            )
+        )
+
+    return session_cache(build, sf_dir, "knn_graph_edges")
 
 
 def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1109,14 +1109,15 @@ def run_stream_decontamination(
     )
     banded = _band_rows(_row_minhash_signature(corpus), keep_signature=True)
 
-    eval_docs = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID)
-        .select("doc_id", "text")
-    )
     eval_sig = session_cache(
-        _minhash_sig_of(
-            _shingles_of(eval_docs, sf_dir, "stream_decontam_eval_shingles")
+        lambda: _minhash_sig_of(
+            _shingles_of(
+                table(spark, sf_dir, "documents")
+                .filter(F.col("doc_id") < EVAL_SET_MAX_DOC_ID)
+                .select("doc_id", "text"),
+                sf_dir,
+                "stream_decontam_eval_shingles",
+            )
         ),
         sf_dir,
         "stream_decontam_eval_sig",

@@ -430,7 +430,7 @@ def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached base re-scans and re-tokenizes the corpus once per branch
     # (the pipeline_domain_mix "measured two parquet scans" lesson, ×4).
     base = session_cache(
-        documents.select(
+        lambda: documents.select(
             "doc_id",
             F.split(norm, " ").alias("w"),
             F.length(F.regexp_replace(norm, " ", "")).cast("long").alias(
@@ -939,27 +939,26 @@ def _bpe_trained(
     # (vocab-sized seq tables, 1-row winners), values identical.
     from simple_query_engine_spark.functions.caching import session_materialize
 
-    docs = _documents(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
-            ).alias("word")
+    def build_seq_0() -> DataFrame:
+        vocab = (
+            _documents(spark, sf_dir)
+            .select(
+                F.explode(
+                    F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+                ).alias("word")
+            )
+            .groupBy("word")
+            .agg(F.count(F.lit(1)).alias("freq"))
         )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    seq = session_materialize(
-        vocab.select(
+        return vocab.select(
             F.regexp_replace("word", "(.)", r"($1)").alias("seq"), "freq"
-        ),
-        sf_dir,
-        "bpe_train_seq_0",
-    )
+        )
+
+    seq = session_materialize(build_seq_0, sf_dir, "bpe_train_seq_0")
     winners = []
     for k in range(1, BPE_MERGES + 1):
         win = session_materialize(
-            _bpe_pair_counts(seq)
+            lambda: _bpe_pair_counts(seq)
             .orderBy(F.col("pair_count").desc(), "left_sym", "right_sym")
             .limit(1),
             sf_dir,
@@ -975,7 +974,7 @@ def _bpe_trained(
             )
         )
         seq = session_materialize(
-            seq.crossJoin(F.broadcast(win.select("left_sym", "right_sym")))
+            lambda: seq.crossJoin(F.broadcast(win.select("left_sym", "right_sym")))
             .select(
                 F.expr(
                     "replace(seq, '(' || left_sym || ')(' || right_sym || ')',"

@@ -59,23 +59,25 @@ def load_tables(
     runs, so "loading" 100 TB of tables is metadata-only.
     """
     tables: dict[str, DataFrame] = {}
+    stamps: dict[str, tuple | None] = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = _read(spark, path)
-        tables[name] = df
+        tables[name], stamps[name] = _read(spark, path)
     if register_views:
-        # The marker folds each handle's identity in (ADVICE r17): after an
-        # in-place regeneration of the same sf_dir, _read hands back FRESH
-        # DataFrames (the handle memo keys on size/mtime) — a marker of
-        # (sf_dir, names) alone would keep serving SQL views pinned to the
-        # old, possibly deleted file listing.
-        marker = (
-            os.path.abspath(sf_dir),
-            tuple(sorted((name, id(df)) for name, df in tables.items())),
-        )
-        if _VIEWS.get(spark) != marker:
+        # The marker holds each table's file stamp, the same (path, size,
+        # mtime_ns) that keys the handle memo: an in-place regeneration
+        # of the same sf_dir changes a stamp and re-registers the views.
+        # (Object ids cannot serve here: CPython reuses the id of a freed
+        # handle, so a fresh DataFrame can carry its predecessor's id.)
+        marker = None  # an unstampable file: never trust the marker
+        if all(stamp is not None for stamp in stamps.values()):
+            marker = (
+                os.path.abspath(sf_dir),
+                tuple(sorted((name, *stamp) for name, stamp in stamps.items())),
+            )
+        if marker is None or _VIEWS.get(spark) != marker:
             for name, df in tables.items():
                 df.createOrReplaceTempView(name)
             _VIEWS[spark] = marker
@@ -84,15 +86,44 @@ def load_tables(
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a single named table from ``sf_dir``."""
-    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))[0]
 
 
-def _read(spark: SparkSession, path: str) -> DataFrame:
+def file_stamp(path: str) -> tuple[str, int, int] | None:
+    """``(path, size, mtime_ns)`` of one file, or None when it cannot be
+    stat'ed — the staleness rule for every session-scoped derivation of
+    a source table: a rewrite in place changes the size or the mtime."""
     try:
         st = os.stat(path)
-        key = (path, st.st_size, st.st_mtime_ns)
     except OSError:
-        return _read_uncached(spark, path)
+        return None
+    return (path, st.st_size, st.st_mtime_ns)
+
+
+def dir_fingerprint(sf_dir: str) -> tuple | None:
+    """The sorted ``(name, size, mtime_ns)`` of every ``*.parquet`` under
+    ``sf_dir`` (:func:`file_stamp`'s rule over the whole catalog), or
+    None when the directory cannot be listed."""
+    try:
+        names = sorted(n for n in os.listdir(sf_dir) if n.endswith(".parquet"))
+    except OSError:
+        return None
+    out = []
+    for name in names:
+        stamp = file_stamp(os.path.join(sf_dir, name))
+        if stamp is not None:
+            out.append((name, stamp[1], stamp[2]))
+    return tuple(out)
+
+
+def _read(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, tuple[str, int, int] | None]:
+    """The memoized handle for ``path`` and the file stamp it is keyed on
+    (None: unstampable, read afresh)."""
+    key = file_stamp(path)
+    if key is None:
+        return _read_uncached(spark, path), None
     per_session = _HANDLES.setdefault(spark, {})
     df = per_session.get(key)
     if df is None:
@@ -101,7 +132,7 @@ def _read(spark: SparkSession, path: str) -> DataFrame:
         # Drop handles for older generations of the same path.
         for other in [k for k in per_session if k[0] == path and k != key]:
             del per_session[other]
-    return df
+    return df, key
 
 
 def _read_uncached(spark: SparkSession, path: str) -> DataFrame:

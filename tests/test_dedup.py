@@ -168,14 +168,18 @@ def test_shingle_df_cap_drops_hot_shingles(spark):
         (0, "rare one"),
         (1, "rare one"),
     }
-    pairs = D._jaccard_pairs(capped, "synthetic-cap-test").collect()
+    pairs = D._jaccard_pairs(
+        capped, "synthetic-cap-test", "cap_test_windowed"
+    ).collect()
     assert {(r.doc_id_a, r.doc_id_b, r.jaccard) for r in pairs} == {(0, 1, 1.0)}
 
 
 def test_shingle_df_cap_is_inert_at_test_scale(spark, sf_dir):
     """Observed max shingle DF is far below MAX_SHINGLE_DF on the synthetic
     corpus — the cap is a pure scale guard, results are identical."""
-    uncapped = D._jaccard_pairs(D._shingles(spark, sf_dir), sf_dir).collect()
+    uncapped = D._jaccard_pairs(
+        D._shingles(spark, sf_dir), sf_dir, "uncapped_test_windowed"
+    ).collect()
     capped = D.q_dedup_ngram_jaccard(spark, sf_dir).collect()
     assert sorted(map(tuple, uncapped)) == sorted(map(tuple, capped))
 
@@ -713,7 +717,7 @@ def test_incremental_components_equal_full_recompute(spark, sf_dir):
     full recompute over all planted pairs produces — and the reduced
     graph it propagates over must be batch-sized, not corpus-sized."""
     sig = D.session_cache(
-        D._minhash_sig_of(
+        lambda: D._minhash_sig_of(
             D._shingles_of(
                 D._planted_documents(spark, sf_dir),
                 sf_dir,
@@ -877,3 +881,43 @@ def test_graph_fast_paths_match_distributed(spark, sf_dir):
             ), q.__name__
         finally:
             spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+
+
+def test_label_spread_null_source_seed_matches_distributed(spark, tmp_path):
+    """A seed whose ``source`` is NULL votes a NULL label.  The local
+    solve must break the vote tie the way the distributed window does —
+    count desc, then label asc with NULLs first — instead of comparing
+    None with str.  Docs 0, 1 and 3 are mutual near-duplicates; seeds 0
+    (NULL source) and 3 ('b') each give node 1 one vote."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    base = " ".join(f"w{i}" for i in range(40))
+    rows = [
+        (0, base + " alpha", "en", None, 0),
+        (1, base + " beta", "en", "a", 0),
+        (3, base + " gamma", "en", "b", 0),
+        (4, " ".join(f"v{i}" for i in range(40)), "en", "c", 0),
+    ]
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("lang", StringType()),
+            StructField("source", StringType()),
+            StructField("n_chars", LongType()),
+        ]
+    )
+    sf = str(tmp_path)
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    fast = sorted(map(tuple, D.q_graph_label_spread(spark, sf).collect()), key=str)
+    spark.conf.set(D.CC_LOCAL_EDGE_CAP_CONF, "0")
+    try:
+        slow = sorted(
+            map(tuple, D.q_graph_label_spread(spark, sf).collect()), key=str
+        )
+    finally:
+        spark.conf.unset(D.CC_LOCAL_EDGE_CAP_CONF)
+    assert fast == slow
+    assert (1, None, 1) in fast
