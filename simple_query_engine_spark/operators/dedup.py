@@ -1012,15 +1012,22 @@ def _cc_local_edge_cap(spark: SparkSession) -> int:
         return CC_LOCAL_EDGE_CAP_DEFAULT
 
 
-def _bounded_edge_rows(edges: DataFrame, cap: int):
-    """One bounded ``limit(cap+1)`` probe of a ``(src, dst)`` edge list:
-    the (src, dst) python rows when the graph fits under ``cap``, else
-    None (caller takes its distributed path).  The probe early-outs — an
-    over-cap graph is never fully scanned."""
+def _bounded_head(df: DataFrame, cap: int):
+    """One bounded ``limit(cap+1)`` probe: ``df``'s rows as pandas when
+    there are at most ``cap`` of them, else None (caller takes its
+    distributed path; ``cap <= 0`` disables the probe).  The probe
+    early-outs — an over-cap input is never fully scanned."""
     if cap <= 0:
         return None
-    head = edges.select("src", "dst").limit(cap + 1).toPandas()
-    if len(head) > cap:
+    head = df.limit(cap + 1).toPandas()
+    return head if len(head) <= cap else None
+
+
+def _bounded_edge_rows(edges: DataFrame, cap: int):
+    """:func:`_bounded_head` of a ``(src, dst)`` edge list as python
+    ``(src, dst)`` rows, or None over the cap."""
+    head = _bounded_head(edges.select("src", "dst"), cap)
+    if head is None:
         return None
     return list(zip(head["src"].tolist(), head["dst"].tolist()))
 
@@ -1339,18 +1346,10 @@ def _propagate_labels(
         edges = edges.persist()
         we_persisted = True
     try:
-        if cap > 0:
-            head = edges.select("src", "dst").limit(cap + 1).toPandas()
-            if len(head) <= cap:
-                node_type = edges.schema["src"].dataType
-                return (
-                    _local_components(
-                        spark,
-                        zip(head["src"].tolist(), head["dst"].tolist()),
-                        node_type,
-                    ),
-                    0,
-                )
+        rows = _bounded_edge_rows(edges, cap)
+        if rows is not None:
+            node_type = edges.schema["src"].dataType
+            return _local_components(spark, rows, node_type), 0
         return _propagate_labels_distributed(edges, max_iterations)
     finally:
         if we_persisted:
@@ -1421,11 +1420,8 @@ def _localize_bounded_pairs(pairs: DataFrame) -> DataFrame:
     relation reused by every consumer; an over-cap list is returned
     unchanged (lazy, the pre-existing behavior)."""
     spark = pairs.sparkSession
-    cap = _cc_local_edge_cap(spark)
-    if cap <= 0:
-        return pairs
-    head = pairs.limit(cap + 1).toPandas()
-    if len(head) > cap:
+    head = _bounded_head(pairs, _cc_local_edge_cap(spark))
+    if head is None:
         return pairs
     return spark.createDataFrame(head, schema=pairs.schema)
 

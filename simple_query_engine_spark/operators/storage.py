@@ -11,9 +11,9 @@ single row is decoded; at 100 TB that is the difference between a 100 TB
 scan and a few-TB scan.
 
 ``q_events_partition_prune`` materializes the date-partitioned copy once
-per scale dir (a real pipeline maintains it as its canonical layout),
-reads it back with a partition-column predicate, and aggregates.  The
-DuckDB oracle runs the same week-window aggregate on the *original*
+per scale dir and session (a real pipeline maintains it as its canonical
+layout), reads it back with a partition-column predicate, and aggregates.
+The DuckDB oracle runs the same week-window aggregate on the *original*
 unpartitioned events table, so the check proves the partitioned layout is
 lossless and the pruned scan returns exactly the rows the predicate
 selects.  The plan assertion (``tests/test_storage.py``) pins
@@ -28,6 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_query_engine_spark.functions.caching import session_path
 from simple_query_engine_spark.functions.hashing import (
     md5_prefix_long,
     md5_prefix_long_sql,
@@ -39,67 +40,12 @@ PRUNE_WEEK_START = "2024-01-08"
 PRUNE_WEEK_END = "2024-01-14"
 
 
-def source_cache_path(sf_dir: str, table_name: str, prefix: str) -> str:
-    """Deterministic per-scale cache path for derived copies of a source
-    table; the source file's size AND mtime are part of the tag so a
-    regenerated testdata set — even one of identical size — invalidates
-    every derived copy.
-
-    The name folds a short hash of the RESOLVED sf_dir path next to the
-    human-readable basename (ADVICE r16): two testdata roots sharing a
-    basename (``/a/sf0.1`` and ``/b/sf0.1``) keep independent derived
-    copies instead of reaping each other's on every alternating call.
-
-    Stale-identity siblings (same table + prefix + root, different
-    size/mtime — i.e. copies derived from a since-regenerated testdata
-    set) are reaped here, the ``_reap_stale_amplified`` discipline: they
-    can never be served again and otherwise accumulate one tree per
-    regeneration forever.  Names belonging to the LIVE identity — the
-    copy itself plus :func:`materialize_once`'s in-flight
-    ``<live>.tmp.<pid>`` and ``<live>.lock`` sidecars — are never
-    touched (ADVICE r16: reaping a concurrent builder's temp dir would
-    defeat materialize_once's flock/atomic-rename race safety; an
-    interleaved rmtree vs rename can leave a ``_SUCCESS``-present cache
-    with part files missing, served silently forever).  Copies for
-    OTHER roots or prefixes are untouched — they coexist legitimately;
-    pre-r17 names (no root hash) can never be served again and are
-    reaped as one-time litter."""
-    import contextlib
-    import hashlib
-    import shutil
-
-    source = os.path.join(sf_dir, f"{table_name}.parquet")
-    stat = os.stat(source)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root_tag = hashlib.md5(
-        os.path.realpath(os.path.abspath(sf_dir)).encode()
-    ).hexdigest()[:8]
-    head = f"sqe_{table_name}_{prefix}_{base}-{root_tag}_"
-    legacy_head = f"sqe_{table_name}_{prefix}_{base}_"  # pre-r17, hashless
-    live = f"{head}{stat.st_size}_{stat.st_mtime_ns}"
-    tmp = tempfile.gettempdir()
-    for name in os.listdir(tmp):
-        if name == live or name.startswith(live + "."):
-            continue  # live copy + its in-flight .tmp.<pid>/.lock sidecars
-        if not (name.startswith(head) or name.startswith(legacy_head)):
-            continue
-        path = os.path.join(tmp, name)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            with contextlib.suppress(OSError):
-                os.unlink(path)
-    return os.path.join(tmp, live)
-
-
-def events_cache_path(sf_dir: str, prefix: str) -> str:
-    """:func:`source_cache_path` over the events table (the historical
-    name most call sites use)."""
-    return source_cache_path(sf_dir, "events", prefix)
-
-
 def materialize_once(path: str, write) -> None:
-    """Build a derived-copy directory exactly once, race-safely.
+    """Build a directory SHARED between processes exactly once,
+    race-safely — the writer for tools that lay out data other processes
+    read (``tools/amplify_testdata.py``).  Derived copies an operator
+    uses itself are session entries instead
+    (:func:`functions.caching.session_path`).
 
     ``write(tmp_path)`` produces the directory at a process-private temp
     path which is then atomically renamed into place, so a reader can
@@ -213,24 +159,20 @@ def scratch_dir(prefix: str, root_name: str = "sqe_scratch") -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
-def _partitioned_events_path(sf_dir: str) -> str:
-    return events_cache_path(sf_dir, "by_day")
-
-
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as date-partitioned parquet (written on first use).
 
     ``event_date`` becomes the hive partition key.  The write goes through
     :func:`write_parquet`, the same sink a production pipeline would use.
     """
-    path = _partitioned_events_path(sf_dir)
-    materialize_once(
-        path,
-        lambda tmp: write_parquet(
+    path = session_path(
+        lambda out: write_parquet(
             table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts")),
-            tmp,
+            out,
             partition_by=["event_date"],
         ),
+        sf_dir,
+        "events_by_day",
     )
     return spark.read.parquet(path)
 
@@ -295,10 +237,6 @@ def q_join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_path(sf_dir: str, fmt: str) -> str:
-    return events_cache_path(sf_dir, fmt)
-
-
 def _events_for_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events projected to roundtrip-stable types (timestamps as epoch
     longs — JSON/CSV have no canonical timestamp encoding; the epoch long
@@ -332,12 +270,10 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV type sniffing (reference ``src/table.rs:111-136``) but per-column
     over the whole sample.
     """
-    path = _roundtrip_path(sf_dir, "json")
-    materialize_once(
-        path,
-        lambda tmp: _events_for_roundtrip(spark, sf_dir)
-        .write.mode("overwrite")
-        .json(tmp),
+    path = session_path(
+        lambda out: _events_for_roundtrip(spark, sf_dir).write.json(out),
+        sf_dir,
+        "events_json",
     )
     return _roundtrip_aggregate(spark.read.json(path))
 
@@ -347,13 +283,12 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; oracle on the original parquet proves losslessness.  This
     is the reference's own load contract (header row, per-column type
     inference) exercised at catalog scale."""
-    path = _roundtrip_path(sf_dir, "csv")
-    materialize_once(
-        path,
-        lambda tmp: _events_for_roundtrip(spark, sf_dir)
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(tmp),
+    path = session_path(
+        lambda out: _events_for_roundtrip(spark, sf_dir)
+        .write.option("header", True)
+        .csv(out),
+        sf_dir,
+        "events_csv",
     )
     df = spark.read.option("header", True).option("inferSchema", True).csv(path)
     return _roundtrip_aggregate(df)
@@ -378,24 +313,24 @@ def q_source_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross a split boundary), so the parallelism unit becomes the file —
     the production mitigation is many files, which the sink's
     partitioned write already produces."""
-    path = _roundtrip_path(sf_dir, "csvdialect")
-    tricky = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit('pre,"mid" '),
-            F.substring("text", 1, 20),
-            F.lit(",\ntail"),
-        ).alias("payload"),
-        "lang",
-    )
-    materialize_once(
-        path,
-        lambda tmp: tricky.write.mode("overwrite")
-        .option("header", True)
-        .option("quote", '"')
-        .option("escape", '"')
-        .csv(tmp),
-    )
+    def write(out: str) -> None:
+        tricky = table(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.concat(
+                F.lit('pre,"mid" '),
+                F.substring("text", 1, 20),
+                F.lit(",\ntail"),
+            ).alias("payload"),
+            "lang",
+        )
+        (
+            tricky.write.option("header", True)
+            .option("quote", '"')
+            .option("escape", '"')
+            .csv(out)
+        )
+
+    path = session_path(write, sf_dir, "documents_csvdialect")
     back = (
         spark.read.option("header", True)
         .option("multiLine", True)
@@ -447,12 +382,10 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike the text formats it carries types natively, so the roundtrip
     projection needs no epoch workaround — but we reuse the same stable
     projection so all three roundtrip queries share one oracle."""
-    path = _roundtrip_path(sf_dir, "orc")
-    materialize_once(
-        path,
-        lambda tmp: _events_for_roundtrip(spark, sf_dir)
-        .write.mode("overwrite")
-        .orc(tmp),
+    path = session_path(
+        lambda out: _events_for_roundtrip(spark, sf_dir).write.orc(out),
+        sf_dir,
+        "events_orc",
     )
     return _roundtrip_aggregate(spark.read.orc(path))
 
@@ -542,13 +475,13 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_manifest_sink(spark)
-    path = events_cache_path(sf_dir, "pysink")
-    materialize_once(
-        path,
-        lambda tmp: _events_for_roundtrip(spark, sf_dir)
+    path = session_path(
+        lambda out: _events_for_roundtrip(spark, sf_dir)
         .write.format("sqe_manifest_parquet")
         .mode("append")
-        .save(tmp),
+        .save(out),
+        sf_dir,
+        "events_pysink",
     )
     return _roundtrip_aggregate(read_manifest_parquet(spark, path))
 
@@ -560,9 +493,9 @@ def q_join_bucketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per order priority over two tables BUCKETED on the join key
     — the layout that elides the fact-fact join shuffle at 100 TB.
 
-    Both sides persist once as bucketed+sorted external tables (location
-    under the system temp dir; a real pipeline maintains these as its
-    canonical fact layout): identically-bucketed scans expose matching
+    Both sides persist once per session as bucketed+sorted external
+    tables (session-registry copies; a real pipeline maintains these as
+    its canonical fact layout): identically-bucketed scans expose matching
     ``HashPartitioning(o_orderkey, N)``, so the sort-merge join consumes
     them with NO exchange — the no-shuffle property is plan-asserted in
     tests/test_bucketing.py, and this catalog entry proves the layout is
@@ -574,52 +507,32 @@ def q_join_bucketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice", "l_discount"
     )
-    # Deterministic per-sf layout path (Python str hash is salted per
-    # process, so the previous abs(hash(sf_dir)) key rewrote the layout —
-    # and leaked a temp dir — on every run): md5 of the resolved sf_dir
-    # names the table; the source file's size+mtime tag (the repo's cache
-    # convention, see events_cache_path) invalidates on regenerated
-    # testdata.  The digest also suffixes the catalog table names so two
-    # sf_dirs in one session cannot clobber each other's registration.
+    # The digest of the resolved sf_dir suffixes the catalog table names
+    # so two sf_dirs in one session cannot clobber each other's
+    # registration.
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    # BOTH source files are part of the tag: a regenerated lineitem.parquet
-    # with an untouched orders.parquet must invalidate the layout too.
-    stat_o = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stat_l = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"sqe_bucketed_{digest}_{stat_o.st_size}_{stat_o.st_mtime_ns}"
-        f"_{stat_l.st_size}_{stat_l.st_mtime_ns}",
-    )
     names = (f"sqe_orders_bkt_{digest}", f"sqe_lineitem_bkt_{digest}")
     for name, df in zip(names, (orders, lineitem)):
-        loc = os.path.join(base, name)
 
-        def _write_bucketed(tmp: str, df: DataFrame = df, name: str = name) -> None:
-            # saveAsTable is the only writer that records the bucket spec,
-            # but it writes straight to its path — so it targets a scratch
-            # table over materialize_once's process-private tmp dir, which
-            # is then atomically renamed into place (two concurrent
-            # processes can no longer interleave writes at the shared
-            # path).  The scratch table has an explicit path, hence is
-            # EXTERNAL: dropping it removes only the metadata entry and
-            # leaves the files for the rename.
-            scratch = f"{name}_w{os.getpid()}"
-            spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+        def _write_bucketed(out: str, df: DataFrame = df, name: str = name) -> None:
+            # saveAsTable is the only writer that records the bucket spec;
+            # with an explicit path the table is EXTERNAL, so the
+            # re-registration below drops only its metadata entry.
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
             (
-                df.write.mode("overwrite")
-                .bucketBy(BUCKETED_JOIN_BUCKETS, "o_orderkey")
+                df.write.bucketBy(BUCKETED_JOIN_BUCKETS, "o_orderkey")
                 .sortBy("o_orderkey")
-                .option("path", tmp)
+                .option("path", out)
                 .format("parquet")
-                .saveAsTable(scratch)
+                .saveAsTable(name)
             )
-            spark.sql(f"DROP TABLE IF EXISTS {scratch}")
 
-        materialize_once(loc, _write_bucketed)
-        # Register the external bucketed table over the committed location —
-        # metadata-only; the one registration path whether this process
-        # wrote the layout or found it.
+        loc = session_path(
+            _write_bucketed, sf_dir, f"{name}_{BUCKETED_JOIN_BUCKETS}"
+        )
+        # Register the external bucketed table over the entry's location —
+        # metadata-only; the one registration path whether this call wrote
+        # the layout or found it.
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )

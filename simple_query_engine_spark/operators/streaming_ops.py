@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from simple_query_engine_spark.functions.caching import session_path
 from simple_query_engine_spark.sources.catalog import table
 from simple_query_engine_spark.streaming.explain_capture import run_to_memory_sink
 from simple_query_engine_spark.streaming.stateful import run_stateful_user_profiles
@@ -97,20 +98,16 @@ def q_stream_restart_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
-        materialize_once,
-        scratch_dir,
-    )
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.streaming.sinks import run_resumable_file_sink
 
-    staged = events_cache_path(sf_dir, "streamsrc")
-    materialize_once(
-        staged,
-        lambda tmp: table(spark, sf_dir, "events")
+    staged = session_path(
+        lambda out: table(spark, sf_dir, "events")
         .select("event_id", "event_type", "value", "user_id")
         .repartition(4)
-        .write.parquet(tmp),
+        .write.parquet(out),
+        sf_dir,
+        "streamsrc",
     )
     part_files = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
     run_root = scratch_dir("stream_resume_")
@@ -138,22 +135,18 @@ def q_stream_upsert_managed(spark: SparkSession, sf_dir: str) -> DataFrame:
     races, no lost batches).  Replay idempotence (the txn skip) and
     vacuum-survival of the txn map are pinned in
     tests/test_streaming_sinks.py."""
-    from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
-        materialize_once,
-        scratch_dir,
-    )
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.streaming.sinks import (
         run_streaming_upsert_managed,
     )
 
-    staged = events_cache_path(sf_dir, "streamsrc_ts")
-    materialize_once(
-        staged,
-        lambda tmp: table(spark, sf_dir, "events")
+    staged = session_path(
+        lambda out: table(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id")
         .repartition(4)
-        .write.parquet(tmp),
+        .write.parquet(out),
+        sf_dir,
+        "streamsrc_ts",
     )
     run_root = scratch_dir("stream_upsert_")
     return run_streaming_upsert_managed(
@@ -175,10 +168,6 @@ def q_stream_ttl_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus 3 watermark-marching sentinels; the emitted set must equal the
     batch gap-sessionization the oracle computes.  Checkpoint-restart
     state survival is pinned in tests/test_stateful_streaming.py."""
-    from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
-        materialize_once,
-    )
     from simple_query_engine_spark.streaming.stateful import (
         run_ttl_session_counts,
     )
@@ -189,15 +178,13 @@ def q_stream_ttl_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    staged = events_cache_path(sf_dir, "ttlsess_v1")
-
-    def _stage(tmp: str) -> None:
+    def _stage(out: str) -> None:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value", "user_id"
         )
         s0, s1, s2 = LATE_BATCH_SPLITS
         write_ordered_batches(
-            tmp,
+            out,
             [
                 ev.filter(F.col("ts") < s0),
                 ev.filter((F.col("ts") >= s0) & (F.col("ts") < s1)),
@@ -210,7 +197,7 @@ def q_stream_ttl_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    materialize_once(staged, _stage)
+    staged = session_path(_stage, sf_dir, "ttlsess_v1")
     sessions = run_ttl_session_counts(spark, staged, max_files_per_trigger=1)
     return sessions.filter(F.col("user_id") != -1)
 
@@ -225,10 +212,6 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     dropped.  The eviction semantics (a duplicate re-arriving after its
     window is NOT suppressed — bounded state, bounded suppression) are
     pinned in tests/test_streaming.py."""
-    from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
-        materialize_once,
-    )
     from simple_query_engine_spark.streaming.windows import (
         DUP_PLANT_MOD,
         LATE_BATCH_SPLITS,
@@ -237,9 +220,7 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     )
     from pyspark.sql import functions as F
 
-    staged = events_cache_path(sf_dir, "dupwm_v1")
-
-    def _stage(tmp: str) -> None:
+    def _stage(out: str) -> None:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
         )
@@ -252,11 +233,11 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("ts") >= s2,
         ]
         write_ordered_batches(
-            tmp,
+            out,
             [ev.filter(w).unionAll(twins.filter(w)) for w in windows],
         )
 
-    materialize_once(staged, _stage)
+    staged = session_path(_stage, sf_dir, "dupwm_v1")
     return run_streaming_dedup_within_watermark(
         spark, staged, max_files_per_trigger=1
     )
@@ -435,11 +416,7 @@ def run_ivf_ingest(
         _kmeans_assign,
         _kmeans_trained,
     )
-    from simple_query_engine_spark.operators.storage import (
-        materialize_once,
-        scratch_dir,
-        source_cache_path,
-    )
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.sources.managed import ManagedTable
     from simple_query_engine_spark.streaming.explain_capture import record_explain
     from simple_query_engine_spark.streaming.windows import read_event_stream
@@ -450,20 +427,17 @@ def run_ivf_ingest(
     )
     if stream_path is None:
         # The staged content IS the vec_id % MOD == REM split, so the
-        # cache tag derives from the split constants (ADVICE r16):
-        # changing them can never serve a stale staged split.
-        staged = source_cache_path(
-            sf_dir, "embeddings", f"ivfingest_{IVF_BATCH_MOD}_{IVF_BATCH_REM}_v1"
-        )
-        materialize_once(
-            staged,
-            lambda tmp: table(spark, sf_dir, "embeddings")
+        # key carries the split constants (ADVICE r16): changing them can
+        # never serve a stale staged split.
+        stream_path = session_path(
+            lambda out: table(spark, sf_dir, "embeddings")
             .filter(is_batch)
             .select("vec_id", "embedding")
             .repartition(4)
-            .write.parquet(tmp),
+            .write.parquet(out),
+            sf_dir,
+            f"ivfingest_{IVF_BATCH_MOD}_{IVF_BATCH_REM}_v1",
         )
-        stream_path = staged
     run_root = scratch_dir("stream_ivf_")
     table_path = os.path.join(run_root, "table")
     run_ivf_ingest.last_table_path = table_path
@@ -590,29 +564,22 @@ def run_components_ingest(
         _planted_documents,
         _standing_labels_managed,
     )
-    from simple_query_engine_spark.operators.storage import (
-        materialize_once,
-        scratch_dir,
-        source_cache_path,
-    )
+    from simple_query_engine_spark.operators.storage import scratch_dir
     from simple_query_engine_spark.sources.managed import ManagedTable
     from simple_query_engine_spark.streaming.explain_capture import record_explain
     from simple_query_engine_spark.streaming.windows import read_event_stream
 
     if stream_path is None:
-        # The staged content IS the planted batch split, so the cache tag
-        # derives from the plant constants (the ivfingest discipline).
-        staged = source_cache_path(
-            sf_dir, "documents", f"ccingest_{PLANT_DOC_MOD}_{PLANT_DOC_OFFSET}_v1"
-        )
-        materialize_once(
-            staged,
-            lambda tmp: _planted_documents(spark, sf_dir)
+        # The staged content IS the planted batch split, so the key
+        # carries the plant constants (the ivfingest discipline).
+        stream_path = session_path(
+            lambda out: _planted_documents(spark, sf_dir)
             .filter(F.col("doc_id") >= PLANT_DOC_OFFSET)
             .repartition(3)
-            .write.parquet(tmp),
+            .write.parquet(out),
+            sf_dir,
+            f"ccingest_{PLANT_DOC_MOD}_{PLANT_DOC_OFFSET}_v1",
         )
-        stream_path = staged
     run_root = scratch_dir("stream_cc_")
     table_path = os.path.join(run_root, "table")
     run_components_ingest.last_table_path = table_path

@@ -245,23 +245,21 @@ def sentinel_batches(spark: SparkSession) -> list[DataFrame]:
     ]
 
 
-def write_ordered_batches(tmp: str, batches: list[DataFrame]) -> None:
+def write_ordered_batches(out: str, batches: list[DataFrame]) -> None:
     """Write each batch as ONE parquet file with strictly increasing
     mtimes (the file stream source replays oldest-first under
-    ``maxFilesPerTrigger=1``), then drop the ``_SUCCESS`` marker
-    ``materialize_once`` requires."""
+    ``maxFilesPerTrigger=1``)."""
     import shutil
 
-    os.makedirs(tmp, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
     for k, batch in enumerate(batches):
-        part_dir = os.path.join(tmp, f"_b{k}")
+        part_dir = os.path.join(out, f"_b{k}")
         batch.coalesce(1).write.parquet(part_dir)
         part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        dest = os.path.join(tmp, f"b{k}.parquet")
+        dest = os.path.join(out, f"b{k}.parquet")
         shutil.move(os.path.join(part_dir, part), dest)
         shutil.rmtree(part_dir)
         os.utime(dest, (1_000_000 * (k + 1), 1_000_000 * (k + 1)))
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def run_late_drop_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,15 +277,10 @@ def run_late_drop_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle computes over the original table (which contains
     neither stragglers-as-late-copies nor sentinels).
     """
-    from simple_query_engine_spark.operators.storage import (
-        events_cache_path,
-        materialize_once,
-    )
+    from simple_query_engine_spark.functions.caching import session_path
     from simple_query_engine_spark.sources.catalog import table
 
-    staged = events_cache_path(sf_dir, "latedrop_v2")
-
-    def _stage(tmp: str) -> None:
+    def _stage(out: str) -> None:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
         )
@@ -296,7 +289,7 @@ def run_late_drop_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s0, s1, s2 = LATE_BATCH_SPLITS
         write_ordered_batches(
-            tmp,
+            out,
             [
                 ev.filter((F.col("ts") < s0) & ~straggler),
                 ev.filter((F.col("ts") >= s0) & (F.col("ts") < s1)),
@@ -306,7 +299,7 @@ def run_late_drop_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             + sentinel_batches(spark),
         )
 
-    materialize_once(staged, _stage)
+    staged = session_path(_stage, sf_dir, "latedrop_v2")
     emitted = _run_windowed_stream(
         spark,
         staged,

@@ -72,15 +72,13 @@ def test_bucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
     assert sorted(map(tuple, bucketed.collect())) == sorted(map(tuple, plain.collect()))
 
 
-def test_bucketed_layout_reused_across_processes(spark, sf_dir):
-    """The layout path is a deterministic md5+mtime key (Python str hash is
-    per-process salted), so a second process — simulated here by dropping
-    the catalog entries while the files remain — must re-register the
-    external tables metadata-only and NOT rewrite a single parquet file."""
+def test_bucketed_layout_reused_in_session(spark, sf_dir):
+    """The layout is a session entry: once the catalog entries are
+    dropped (the files remain), a rerun re-registers the external tables
+    metadata-only and does NOT rewrite a single parquet file."""
     import glob
     import hashlib
     import os
-    import tempfile
 
     from simple_query_engine_spark.operators.storage import (
         q_join_bucketed_revenue,
@@ -88,23 +86,24 @@ def test_bucketed_layout_reused_across_processes(spark, sf_dir):
 
     r1 = sorted(map(tuple, q_join_bucketed_revenue(spark, sf_dir).collect()))
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    stat_o = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    stat_l = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"sqe_bucketed_{digest}_{stat_o.st_size}_{stat_o.st_mtime_ns}"
-        f"_{stat_l.st_size}_{stat_l.st_mtime_ns}",
-    )
-    files = sorted(glob.glob(os.path.join(base, "*", "*.parquet")))
-    assert files, base
-    mtimes = [os.path.getmtime(f) for f in files]
-    spark.sql(f"DROP TABLE IF EXISTS sqe_orders_bkt_{digest}")
-    spark.sql(f"DROP TABLE IF EXISTS sqe_lineitem_bkt_{digest}")
+    names = (f"sqe_orders_bkt_{digest}", f"sqe_lineitem_bkt_{digest}")
+
+    def layout_files():
+        files = []
+        for name in names:
+            loc = os.path.commonpath(
+                [f.replace("file://", "", 1) for f in spark.table(name).inputFiles()]
+            )
+            files += glob.glob(os.path.join(loc, "*.parquet"))
+        return sorted((f, os.path.getmtime(f)) for f in files)
+
+    files = layout_files()
+    assert files
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
     r2 = sorted(map(tuple, q_join_bucketed_revenue(spark, sf_dir).collect()))
     assert r2 == r1
-    files2 = sorted(glob.glob(os.path.join(base, "*", "*.parquet")))
-    assert files2 == files
-    assert [os.path.getmtime(f) for f in files2] == mtimes
+    assert layout_files() == files
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):

@@ -81,8 +81,6 @@ def test_dir_fingerprint_tracks_parquet_files(tmp_path):
 
 
 def test_hit_never_calls_build(spark, sf_dir):
-    """Uses the real sf_dir as the tag (a fake dir would evict the shared
-    caches other tests reuse)."""
     cached = _Counter(lambda: spark.range(7))
     first = C.session_cache(cached, sf_dir, "_test_hit_cache")
     assert C.session_cache(cached, sf_dir, "_test_hit_cache") is first
@@ -126,12 +124,59 @@ def test_new_token_rebuilds_and_releases_the_old_entry(spark, sf_dir):
     ), "the replaced materialization's files must be deleted"
 
 
+def test_unstampable_dir_is_never_served(spark, tmp_path):
+    """A dir that cannot be listed (a ``file://`` URI root) has no
+    fingerprint, so nothing tells a rewrite apart: every call builds
+    afresh, registers nothing and caches nothing (Spark's cache manager
+    would serve a cached scan of the old files by path)."""
+    root = "file://" + str(tmp_path)
+    assert catalog.dir_fingerprint(root) is None
+    _write_region(str(tmp_path / "region.parquet"), 3)
+    build = _Counter(lambda: spark.read.parquet(root + "/region.parquet"))
+    assert C.session_cache(build, root, "_test_unstampable").count() == 3
+    _write_region(str(tmp_path / "region.parquet"), 5)
+    assert C.session_cache(build, root, "_test_unstampable").count() == 5
+    assert build.calls == 2
+
+
+def test_same_basename_roots_alternate_without_rebuilding(spark, tmp_path):
+    """Two roots sharing a basename (``/a/sfX`` and ``/b/sfX``) requested
+    alternately in one session keep independent entries: every tier's
+    builder runs once per root, and each root's staged copy survives the
+    other root's requests."""
+    roots = []
+    for side, n in (("a", 3), ("b", 4)):
+        root = tmp_path / side / "sfX"
+        root.mkdir(parents=True)
+        _write_region(str(root / "region.parquet"), n)
+        roots.append(str(root))
+
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        os.makedirs(path)
+
+    builders = {
+        C.session_cache: _Counter(lambda: spark.range(2)),
+        C.session_materialize: _Counter(lambda: spark.range(2)),
+        C.session_value: _Counter(lambda: "v"),
+    }
+    for _ in range(3):
+        for root in roots:
+            for tier, build in builders.items():
+                tier(build, root, "_test_roots")
+            assert os.path.isdir(C.session_path(write, root, "_test_roots"))
+    assert [b.calls for b in builders.values()] == [2, 2, 2]
+    assert len(writes) == 2 and writes[0] != writes[1]
+    assert all(os.path.isdir(p) for p in writes)
+
+
 def test_in_place_rewrite_serves_the_new_data(spark, sf_dir, tmp_path):
     """Rewriting documents.parquet within one session must rebuild the
     signature materialization, the near-dup pair cache and the collected
     edge list: both entries then equal a from-scratch run over the new
-    file.  No other scale dir is touched between the two runs, so the
-    cross-dir eviction cannot be what refreshes them."""
+    file."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq

@@ -76,18 +76,22 @@ def test_csv_dialect_payload_bytes_survive(spark, sf_dir):
     derivation exactly — embedded comma, doubled-quote escaping, and the
     quoted newline all survive the sink+source roundtrip (the multiLine
     record reassembly the aggregate fingerprints corpus-wide)."""
-    from simple_query_engine_spark.operators.storage import (
-        _roundtrip_path,
-        q_source_csv_dialect,
-    )
+    import os
 
-    q_source_csv_dialect(spark, sf_dir).collect()  # ensure materialized
+    from simple_query_engine_spark.operators.storage import q_source_csv_dialect
+
+    staged = os.path.commonpath(
+        [
+            f.replace("file://", "", 1)
+            for f in q_source_csv_dialect(spark, sf_dir).inputFiles()
+        ]
+    )
     back = (
         spark.read.option("header", True)
         .option("multiLine", True)
         .option("quote", '"')
         .option("escape", '"')
-        .csv(_roundtrip_path(sf_dir, "csvdialect"))
+        .csv(staged)
     )
     row = back.filter("CAST(doc_id AS BIGINT) = 0").collect()[0]
     src = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(

@@ -345,81 +345,91 @@ def test_z_interleave_matches_python_bit_model(spark):
         assert r["z"] == model([r["a"], r["b"], r["c"]]), (r["a"], r["b"], r["c"])
 
 
-def test_source_cache_path_reaps_stale_identity_siblings(sf_dir):
-    """Regenerated-testdata litter (r16, the _reap_stale_amplified
-    discipline applied to staged source copies): a cached derived copy
-    whose size/mtime tag no longer matches the live source is reaped by
-    the next source_cache_path call for the same table+prefix+scale —
-    as is a pre-r17 hashless-format name (ADVICE r16 migration).  The
-    live copy, the live identity's in-flight materialize_once sidecars
-    (`.tmp.<pid>` dir, `.lock` file — ADVICE r16 medium: reaping those
-    would defeat the flock/atomic-rename race safety), other prefixes,
-    and other scale names all survive."""
+def _scan_root(df) -> str:
+    """The directory a file scan reads (common parent of its files)."""
+    import os
+
+    return os.path.commonpath(
+        [f.replace("file://", "", 1) for f in df.inputFiles()]
+    )
+
+
+def test_in_place_rewrite_refreshes_the_partitioned_copy(spark, sf_dir, tmp_path):
+    """Rewriting events.parquet within one session: events_partition_prune
+    then equals a from-scratch run over the new file, and the old
+    partitioned copy's directory is gone."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    source = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    rewritten = source.filter(pc.not_equal(pc.bit_wise_and(source["event_id"], 3), 0))
+
+    def run(dir_):
+        return sorted(map(tuple, q_events_partition_prune(spark, dir_).collect()))
+
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    pq.write_table(rewritten, str(fresh / "events.parquet"))
+    want_new = run(str(fresh))
+
+    live = tmp_path / "live"
+    live.mkdir()
+    path = str(live / "events.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "events.parquet"), path)
+    before = run(str(live))
+    old_copy = _scan_root(partitioned_events(spark, str(live)))
+    pq.write_table(rewritten, path)  # in place: same path, same dir
+    after = run(str(live))
+    assert after == want_new and after != before
+    assert not os.path.exists(old_copy)
+    assert _scan_root(partitioned_events(spark, str(live))) != old_copy
+
+
+def test_staged_copies_leave_no_tempdir_names(spark, sf_dir, tmp_path, monkeypatch):
+    """Every staged copy the storage and streaming entries derive is a
+    session entry in the scratch root: none is left in the temp dir
+    under a name derived from its source table."""
     import os
     import tempfile
 
-    from simple_query_engine_spark.operators.storage import source_cache_path
+    from simple_query_engine_spark.operators import streaming_ops
+    from simple_query_engine_spark.operators import storage
 
-    prefix = f"reaptest{os.getpid()}"
-    live = source_cache_path(sf_dir, "events", prefix)
-    head = live.rsplit("_", 2)[0]  # sqe_events_<prefix>_<sfbase>-<roottag>
-    tmp = tempfile.gettempdir()
-    stale = f"{head}_1_2"
-    legacy = f"{head.rsplit('-', 1)[0]}_3_4"  # pre-r17: no -<roottag>
-    other_prefix = live.replace(prefix, prefix + "x")
-    other_scale = f"{head}zz_1_2"
-    live_tmp_sidecar = f"{live}.tmp.12345"
-    live_lock_sidecar = f"{live}.lock"
-    dirs = (live, stale, legacy, other_prefix, other_scale, live_tmp_sidecar)
-    try:
-        for p in dirs:
-            os.makedirs(p, exist_ok=True)
-        with open(live_lock_sidecar, "w"):
-            pass
-        got = source_cache_path(sf_dir, "events", prefix)
-        assert got == live
-        assert os.path.isdir(live)
-        assert not os.path.exists(stale)
-        assert not os.path.exists(legacy)
-        assert os.path.isdir(other_prefix) and os.path.isdir(other_scale)
-        assert os.path.isdir(live_tmp_sidecar), "in-flight builder temp reaped"
-        assert os.path.exists(live_lock_sidecar), "builder lock reaped"
-    finally:
-        import shutil
-
-        for p in dirs:
-            shutil.rmtree(p, ignore_errors=True)
-        if os.path.exists(live_lock_sidecar):
-            os.unlink(live_lock_sidecar)
-
-
-def test_source_cache_path_same_basename_roots_coexist(tmp_path):
-    """ADVICE r16 low: two testdata roots sharing a basename (/a/sf0.1
-    and /b/sf0.1) must keep INDEPENDENT derived copies — alternating
-    calls against both roots must not reap each other's live trees
-    (pre-fix they did, re-materializing multi-GB copies every swap)."""
-    import os
-
-    from simple_query_engine_spark.operators.storage import source_cache_path
-
-    roots = []
-    for side in ("a", "b"):
-        root = tmp_path / side / "sfX"
-        root.mkdir(parents=True)
-        (root / "events.parquet").write_bytes(b"x" * (len(side) + 7))
-        roots.append(str(root))
-    p_a = source_cache_path(roots[0], "events", "coex")
-    p_b = source_cache_path(roots[1], "events", "coex")
-    assert p_a != p_b, "same-basename roots collide on cache identity"
-    try:
-        os.makedirs(p_a, exist_ok=True)
-        os.makedirs(p_b, exist_ok=True)
-        # Alternating calls: each root's reap pass must spare the other's.
-        assert source_cache_path(roots[0], "events", "coex") == p_a
-        assert source_cache_path(roots[1], "events", "coex") == p_b
-        assert os.path.isdir(p_a) and os.path.isdir(p_b)
-    finally:
-        import shutil
-
-        shutil.rmtree(p_a, ignore_errors=True)
-        shutil.rmtree(p_b, ignore_errors=True)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    private = str(tmp_path / "sf")  # a scale dir of its own: every copy is a miss
+    os.mkdir(private)
+    for name in os.listdir(sf_dir):
+        os.symlink(os.path.join(sf_dir, name), os.path.join(private, name))
+    entries = [
+        storage.QUERIES[name]
+        for name in (
+            "events_partition_prune",
+            "join_dpp_partitioned",
+            "join_bucketed_revenue",
+            "source_json_roundtrip",
+            "source_csv_roundtrip",
+            "source_csv_dialect",
+            "source_orc_roundtrip",
+            "sink_python_datasource",
+        )
+    ] + [
+        streaming_ops.QUERIES[name]
+        for name in (
+            "stream_restart_resume",
+            "stream_upsert_managed",
+            "stream_ttl_sessions",
+            "stream_dedup_within_watermark",
+            "stream_watermark_late_drop",
+            "stream_ivf_ingest",
+            "stream_components_incremental",
+        )
+    ]
+    for entry in entries:
+        assert entry(spark, private).collect()
+    prefixes = ("sqe_events_", "sqe_embeddings_", "sqe_documents_", "sqe_bucketed_")
+    assert [n for n in os.listdir(tmp) if n.startswith(prefixes)] == []

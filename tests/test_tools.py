@@ -123,3 +123,19 @@ def test_scratch_ttl_env_malformed_falls_back(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == str(24 * 3600)
+
+
+def test_traced_functions_still_resolve():
+    """Every engine function the benchmark's traced runs wrap by name
+    (``perfbench/tracing.FUNCTIONS``) must still exist: a rename or a
+    deletion would otherwise break every ``--trace 1`` run."""
+    import importlib
+
+    from perfbench.tracing import FUNCTIONS
+
+    missing = [
+        (module, attr)
+        for module, attr in FUNCTIONS
+        if not callable(getattr(importlib.import_module(module), attr, None))
+    ]
+    assert missing == []

@@ -30,8 +30,11 @@ inheriting cache churn from ~20 prior entries sharing one JVM (r15
 measured sim_knn_density 124 s in-gate vs 51 s isolated purely from
 that churn).  A real regression can no longer hide inside "cache
 churn", and a cache-crowding speedup can no longer flatter an entry.
-Disk-backed state (materialize_once scratch, managed standing
-snapshots) is untouched — only executor-memory caching is reset.
+``evict_all()`` releases every registry tier, so an entry's staged
+copies (``session_path``: partitioned, round-trip and stream-source
+copies) and materializations are rebuilt inside its timer too; the
+managed standing snapshots (``dedup._standing_labels_managed``,
+persistent production state) are untouched.
 
 SPLIT TIMING (r16): each verdict records ``spark_sec`` and
 ``oracle_sec`` separately — the r16 measurements showed several heavy
